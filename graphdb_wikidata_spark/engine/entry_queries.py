@@ -9,16 +9,14 @@ columns so DuckDB oracles over the base tables can hash-match.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 from .api import GraphEngine
 from .tpch_graph import tpch_statements
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
 
 _ENGINES: dict[tuple[int, str], GraphEngine] = {}
 
@@ -36,16 +34,6 @@ def _engine(spark: SparkSession, sf_dir: str) -> GraphEngine:
 
         _ENGINES[key] = GraphEngine(spark, materialized_statements(spark, sf_dir))
     return _ENGINES[key]
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _e(col: str):

@@ -347,10 +347,7 @@ def materialized_statements(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
         import tempfile
 
-        nparts_env = os.environ.get("SPARK_GRAFT_CACHE_PARTITIONS")
-        nparts = (
-            int(nparts_env) if nparts_env else spark.sparkContext.defaultParallelism
-        )
+        nparts = spark.sparkContext.defaultParallelism
 
         # write-side subject clustering is NOT redundant with the
         # read-side repartition (r04 bisect measured dropping it: 4.5x

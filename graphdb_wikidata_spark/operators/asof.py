@@ -13,26 +13,14 @@ a broadcast-nested-loop range join dies.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..tables import epoch_us, table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 
 
 def asof_join(

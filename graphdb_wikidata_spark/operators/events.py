@@ -9,27 +9,13 @@ forms here are oracle-checkable.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..rounding import round_half_up
 from ..tables import epoch_us, table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 minutes in microseconds
@@ -858,24 +844,15 @@ def events_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming-aggregation pattern. Per-key state is one float; the
     oracle runs the SAME recurrence as a recursive CTE, both sides
     evaluating ``(s + value) - drift`` left-associated, so the float
-    trajectories are bit-identical. That per-element Python accumulate
-    is the kernel's CPU ceiling at 100 TB (VERDICT r05 #3) — set
-    ``SPARK_GRAFT_CUSUM_CLOSED_FORM=1`` to switch the inner loop to the
-    fully-vectorized prefix-sum identity
-    ``S_i = P_i - min(0, min_{j<=i} P_j)`` with ``P_i = cumsum(value -
-    drift)``: mathematically exact, but it computes a DIFFERENT float
-    trajectory once clamping occurs (the recurrence re-associates every
-    addition at each clamp; deviation is O(n * eps * |values|), ~1e-10
-    at the test scale — see docs/SCALING.md for the measured speedup
-    and deviation), so the driver-hash default stays the bit-identical
-    recurrence. The streaming twin is an applyInPandasWithState with
-    the single-float state (cf. [[stream_ewma_bounded]])."""
-    import os
-
+    trajectories are bit-identical. (The vectorized prefix-sum identity
+    ``S_i = P_i - min(0, min_{j<=i} P_j)`` is mathematically exact but
+    re-associates the sums once clamping occurs, so it cannot match
+    the oracle bit-for-bit.) The streaming twin is an
+    applyInPandasWithState with the single-float state (cf.
+    [[stream_ewma_bounded]])."""
     import numpy as np
     import pandas as pd
 
-    closed_form = os.environ.get("SPARK_GRAFT_CUSUM_CLOSED_FORM", "0") == "1"
     e = table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
 
     def cusum_partition(batches):
@@ -884,9 +861,6 @@ def events_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         def trajectory(vals: "np.ndarray") -> "np.ndarray":
-            if closed_form:
-                p = np.cumsum(vals - CUSUM_DRIFT)
-                return p - np.minimum.accumulate(np.minimum(p, 0.0))
             return step.accumulate(
                 np.concatenate(([0.0], vals)), dtype=np.object_
             )[1:].astype(np.float64)

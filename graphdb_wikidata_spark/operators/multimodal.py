@@ -21,7 +21,7 @@ sampling logic by closed form.
 from __future__ import annotations
 
 import functools
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,19 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 
 
 # --------------------------------------------------------------------------

@@ -15,26 +15,13 @@ same way MinHash-LSH does for documents.
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..rounding import round_half_up
 from ..tables import table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 
 
 def _as_double(col: str):

@@ -11,25 +11,12 @@ they scale linearly with input splits at 100 TB.
 from __future__ import annotations
 
 import uuid
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..tables import table
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 
 
 STOPWORDS = ("the", "a", "of", "and", "in")

@@ -63,7 +63,13 @@ def make_handler(engine: GraphEngine, max_result_rows: "int | None" = 1_000_000)
             if u.path != "/query":
                 self._reply(404, json.dumps({"error": "use /query"}), "application/json")
                 return
-            n = int(self.headers.get("Content-Length") or 0)
+            try:
+                n = int(self.headers.get("Content-Length") or 0)
+            except ValueError:
+                n = -1
+            if n < 0:
+                self._reply(400, json.dumps({"error": "invalid Content-Length"}), "application/json")
+                return
             body = self.rfile.read(n).decode("utf-8") if n else ""
             ctype = (self.headers.get("Content-Type") or "").split(";")[0].strip()
             params = parse_qs(urlparse(self.path).query)

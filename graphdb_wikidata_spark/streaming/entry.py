@@ -6,11 +6,10 @@ equal the batch answer."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
 from .streams import (
     dedup_within_watermark,
     events_stream,
@@ -22,20 +21,8 @@ from .streams import (
     tumbling_counts,
 )
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @register(

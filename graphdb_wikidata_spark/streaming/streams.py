@@ -335,11 +335,7 @@ def run_available_now(
     old_ndmb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     try:
         spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get(
-                "SPARK_GRAFT_STREAM_PARTITIONS",
-                str(spark.sparkContext.defaultParallelism),
-            ),
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
         )
         # availableNow runs one trailing NO-DATA micro-batch to advance
         # the watermark. Append-mode sinks need it (that batch emits the

@@ -31,6 +31,19 @@ def test_every_query_has_oracle_or_is_flagged():
     assert set(missing) <= allowed, f"queries without oracles: {missing}"
 
 
+def test_register_rejects_a_taken_name():
+    from graphdb_wikidata_spark.operators import register
+
+    before = entry_mod.queries(), entry_mod.oracle_sql()
+    with pytest.raises(ValueError, match="sparql_bgp_join"):
+
+        @register("sparql_bgp_join", "SELECT 1")
+        def stub(spark, sf_dir):  # pragma: no cover - never registered
+            raise AssertionError
+
+    assert (entry_mod.queries(), entry_mod.oracle_sql()) == before
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, name):
     df = QUERIES[name](spark, SF_SMOKE)

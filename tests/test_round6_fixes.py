@@ -224,33 +224,3 @@ def test_semdedup_trained_centroids_recall_not_worse(spark):
     ).count()
     assert trained_pairs >= naive_pairs
     assert trained_pairs <= all_pairs  # clustering never invents pairs
-
-
-# ---------------------------------------------------------------------------
-# CUSUM closed-form flag (VERDICT r05 #3 / task 6)
-# ---------------------------------------------------------------------------
-
-
-def test_cusum_closed_form_matches_recurrence(spark, monkeypatch):
-    from graphdb_wikidata_spark.operators import events
-
-    default = {
-        r.user_id: r
-        for r in events.QUERIES["events_cusum_alerts"](spark, SF_SMOKE).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_CUSUM_CLOSED_FORM", "1")
-    closed = {
-        r.user_id: r
-        for r in events.QUERIES["events_cusum_alerts"](spark, SF_SMOKE).collect()
-    }
-    assert set(default) == set(closed)
-    worst = 0.0
-    for uid, d in default.items():
-        c = closed[uid]
-        assert c.n_events == d.n_events
-        assert c.n_alarms == d.n_alarms  # no value sits ON the threshold
-        worst = max(worst, abs(c.max_cusum - d.max_cusum))
-    # the documented FP deviation: the identity re-associates sums, so
-    # trajectories differ at O(n * eps * |value|) — far below the 6dp
-    # report rounding on this data
-    assert worst <= 1e-6, worst

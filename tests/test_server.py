@@ -3,6 +3,7 @@ the reference server contract (server.rs:24-141)."""
 
 from __future__ import annotations
 
+import http.client
 import json
 import threading
 import urllib.parse
@@ -203,6 +204,24 @@ def test_post_parse_error_400(srv):
         raise AssertionError("expected 400")
     except urllib.error.HTTPError as e:
         assert e.code == 400
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_post_bad_content_length_400(srv, length):
+    """A non-integer or negative Content-Length gets a 400 JSON error,
+    not a dropped connection or a handler blocked on read(-1)."""
+    host, port = urllib.parse.urlsplit(srv).netloc.split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=30)
+    try:
+        conn.putrequest("POST", "/query")
+        conn.putheader("Content-Type", "application/sparql-query")
+        conn.putheader("Content-Length", length)
+        conn.endheaders()
+        r = conn.getresponse()
+        assert r.status == 400
+        assert "Content-Length" in json.loads(r.read().decode())["error"]
+    finally:
+        conn.close()
 
 
 def test_xml_results_format(srv):

@@ -293,11 +293,13 @@ class GraphEngine:
             df = df.drop(*bn)
         return df, not comp.used_remote_service
 
-    def explain(self, query: str, mode: str = "formatted") -> str:
+    def explain(self, query: str, mode: str = "formatted", **ds) -> str:
         """The Catalyst physical plan for a SPARQL query — the
         replacement for reasoning about which of the reference's four
-        sorted indexes a query would hit."""
-        df = self.sql(query)
+        sorted indexes a query would hit. ``**ds`` forwards
+        ``default_graphs``/``named_graphs``, so the plan is the one
+        that would run."""
+        df = self.sql(query, **ds)
         return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
             df._jdf.queryExecution(), mode
         )

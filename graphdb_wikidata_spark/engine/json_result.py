@@ -90,19 +90,12 @@ def _tsv_term(c) -> "F.Column":
     """One cell in SPARQL TSV term syntax: IRIs in <>, literals quoted
     with \\-escapes plus @lang / ^^<datatype>; numerics and booleans as
     bare literals (allowed by the TSV spec and round-trippable)."""
-    quoted = F.concat(
-        F.lit('"'),
-        F.regexp_replace(
-            F.regexp_replace(
-                F.regexp_replace(c["s"], F.lit("\\\\"), F.lit("\\\\\\\\")),
-                F.lit('"'),
-                F.lit('\\\\"'),
-            ),
-            F.lit("\n"),
-            F.lit("\\\\n"),
-        ),
-        F.lit('"'),
-    )
+    escaped = c["s"]
+    # backslash first, so the escapes added after it stay single
+    for ch, esc in (("\\\\", "\\\\\\\\"), ('"', '\\\\"'), ("\n", "\\\\n"),
+                    ("\r", "\\\\r"), ("\t", "\\\\t")):
+        escaped = F.regexp_replace(escaped, F.lit(ch), F.lit(esc))
+    quoted = F.concat(F.lit('"'), escaped, F.lit('"'))
     return (
         F.when(c.isNull(), F.lit(""))
         .when(c["t"].isin("entity", "stmt"), F.concat(F.lit("<"), render(c), F.lit(">")))

@@ -124,7 +124,7 @@ def make_handler(engine: GraphEngine, max_result_rows: "int | None" = 1_000_000)
                     )
                     return
                 try:
-                    plan = engine.explain(q, mode=mode)
+                    plan = engine.explain(q, mode=mode, **ds)
                 except (SyntaxError, NotImplementedError) as e:
                     self._reply(400, json.dumps({"error": str(e)}), "application/json")
                     return

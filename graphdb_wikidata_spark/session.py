@@ -58,11 +58,11 @@ def get_spark(
         # nondeterministically (measured 16s -> 71s on back-to-back
         # identical CC runs). 5min bounds the accumulation window.
         .config("spark.cleaner.periodicGC.interval", "5min")
-        # ...but that periodic System.gc() (and release_session_caches'
-        # explicit one) is a STOP-THE-WORLD full collection of a 48g
-        # heap by default — multi-second to ~30s pauses that land in
-        # the middle of whatever query is running. Round-9 measurement:
-        # queries showed 18-37s outliers on a 0.5-1.3s steady state
+        # ...but that periodic System.gc() is a STOP-THE-WORLD full
+        # collection of a 48g heap by default — multi-second to ~30s
+        # pauses that land in the middle of whatever query is running.
+        # Round-9 measurement: queries showed 18-37s outliers on a
+        # 0.5-1.3s steady state
         # (the round-8 artifact's 27 retries and uniform ~1.5x shift
         # are this same pause lottery). ExplicitGCInvokesConcurrent
         # turns explicit GCs into a concurrent G1 cycle: 204
@@ -95,44 +95,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def release_session_caches(spark: SparkSession) -> None:
-    """Drop every per-session memoized engine structure: the persisted
-    statements table, the GraphEngine memos (whose plan caches pin path
-    closures' localCheckpoint blocks), and the graph edge cache — then
-    clear the storage catalog and nudge a JVM GC so the ContextCleaner
-    can actually free the checkpoint blocks.
-
-    Used by bench.py between scale twins: keeping the 1x AND 10x caches
-    resident put the 48g heap under enough GC pressure to contaminate
-    whole measurement blocks (VERDICT r04 task 2). A deployment serving
-    one dataset never needs this; a process cycling datasets calls it
-    when retiring one."""
-    sid = id(spark)
-
-    from .engine import entry_queries, tpch_graph
-    from .operators import graph as graph_ops
-
-    for key in [k for k in tpch_graph._MATERIALIZED if k[0] == sid]:
-        df = tpch_graph._MATERIALIZED.pop(key)
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 - already released
-            pass
-    for memo in (entry_queries._ENGINES, entry_queries._UNION_ENGINES):
-        for key in [k for k in memo if k[0] == sid]:
-            memo.pop(key, None)
-    for key in [k for k in graph_ops._EDGE_CACHE if k[0] == sid]:
-        graph_ops._EDGE_CACHE.pop(key, None)
-    try:
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001
-        pass
-    try:
-        # localCheckpoint blocks free only when the ContextCleaner sees
-        # their RDDs collected; an explicit System.gc() makes that
-        # happen now instead of at the next 5min periodic tick
-        spark._jvm.System.gc()  # type: ignore[union-attr]
-    except Exception:  # noqa: BLE001
-        pass

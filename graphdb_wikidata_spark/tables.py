@@ -23,8 +23,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Filters/projections applied by the caller reach the

@@ -5,29 +5,42 @@ and the resulting directory serves queries via from_parquet."""
 
 from __future__ import annotations
 
+import json
+
 import graphdb_wikidata_spark.__main__ as cli
 from graphdb_wikidata_spark.engine import GraphEngine
+from tests.conftest import (
+    WIKIDATA_SAMPLE,
+    wikidata_sample_entities,
+    wikidata_sample_statement_count,
+)
 
-FIXTURE = "/root/reference/tests/data/first_5_lines.txt"
+
+def _q31_instance_of(eng) -> set[str]:
+    doc = json.loads(eng.sql_json("SELECT ?o WHERE { wd:Q31 wdt:P31 ?o . }"))
+    return {b["o"]["value"] for b in doc["results"]["bindings"]}
+
+
+def _q31_instance_of_expected() -> set[str]:
+    (q31,) = [e for e in wikidata_sample_entities() if e["id"] == "Q31"]
+    return {
+        "http://www.wikidata.org/entity/" + c["mainsnak"]["datavalue"]["value"]["id"]
+        for c in q31["claims"]["P31"]
+    }
 
 
 def test_create_db_index_and_query(spark, tmp_path, monkeypatch, capsys):
     # main() builds its own session via get_spark; with one already
     # running getOrCreate reuses it, so this stays one-JVM
     db = str(tmp_path / "wikidata")
-    assert cli.main(["-d", db, "create-db", "-f", FIXTURE]) == 0
+    assert cli.main(["-d", db, "create-db", "-f", WIKIDATA_SAMPLE]) == 0
     created = capsys.readouterr().out
-    assert "statements" in created
+    assert created.strip().endswith(f": {wikidata_sample_statement_count()} statements")
 
     assert cli.main(["-d", db, "create-index"]) == 0
 
     eng = GraphEngine.from_parquet(spark, db)
-    # the reference's own published cardinality for its fixture:
-    # wd:Q31 ?p ?b -> 1354 rows (test_requests.txt:15-20)
-    n = eng.sql(
-        "SELECT ?p ?b WHERE { <http://www.wikidata.org/entity/Q31> ?p ?b . }"
-    ).count()
-    assert n == 1354
+    assert _q31_instance_of(eng) == _q31_instance_of_expected()
 
 
 def test_no_subcommand_prints_help(capsys):
@@ -39,17 +52,14 @@ def test_create_index_by_predicate(spark, tmp_path, capsys):
     import os
 
     db = str(tmp_path / "wikidata_bp")
-    assert cli.main(["-d", db, "create-db", "-f", FIXTURE]) == 0
+    assert cli.main(["-d", db, "create-db", "-f", WIKIDATA_SAMPLE]) == 0
     assert cli.main(["-d", db, "create-index", "--by-predicate"]) == 0
     capsys.readouterr()
     assert any(d.startswith("pred_kind=") for d in os.listdir(db))
     # the partitioned layout still serves queries (pred_kind becomes a
     # partition column; the scan path reads it like any other column)
     eng = GraphEngine.from_parquet(spark, db)
-    n = eng.sql(
-        "SELECT ?p ?b WHERE { <http://www.wikidata.org/entity/Q31> ?p ?b . }"
-    ).count()
-    assert n == 1354
+    assert _q31_instance_of(eng) == _q31_instance_of_expected()
 
 
 def test_cli_pipeline(spark, tmp_path, capsys):

@@ -181,44 +181,3 @@ def test_inflight_failure_propagates_and_clears(spark):
     # engine still usable after the failed compile
     assert eng.sql("SELECT ?s WHERE { ?s wdt:P1 ?o }").count() == 1
 
-
-def test_bench_interleaved_min_warmup_uncounted():
-    """bench._interleaved_min: the warmup pass runs every query once
-    but is NOT a sample — per-query min comes from the counted passes
-    only (a warmup outlier must not become the reported number), and
-    execution order is warmup-all, then pass1-all, then pass2-all
-    (interleaving is the anti-contamination property)."""
-    import bench
-
-    calls = []
-    # q1: warmup artificially FAST (0.1) vs counted samples 1.0/1.1 —
-    # if warmup leaked into samples, min would be 0.1
-    seq = {"q1": iter([0.1, 1.0, 1.1]), "q2": iter([5.0, 2.0, 2.05])}
-
-    class FakeClock:
-        t = 0.0
-
-    def fake_perf():
-        return FakeClock.t
-
-    real_perf = bench.time.perf_counter
-    bench.time.perf_counter = fake_perf
-    try:
-        def runner(name):
-            calls.append(name)
-            FakeClock.t += next(seq[name])
-            return 7
-
-        class FakeSpark:
-            _jvm = None
-
-        timings, gc_sec, rows, retries = bench._interleaved_min(
-            FakeSpark(), ["q1", "q2"], runner, "test"
-        )
-    finally:
-        bench.time.perf_counter = real_perf
-    assert calls == ["q1", "q2", "q1", "q2", "q1", "q2"]  # 3 passes, interleaved
-    assert timings["q1"] == 1.0  # warmup 0.1 not counted
-    assert timings["q2"] == 2.0  # warmup 5.0 not counted
-    assert rows == {"q1": 7, "q2": 7}
-    assert retries == 0  # 1.0 vs 1.1 and 2.0 vs 2.05 are within 1.5x

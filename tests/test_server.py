@@ -170,6 +170,22 @@ def test_tsv_results_format_via_accept(srv):
     assert lines[1].endswith("\t5")
 
 
+def test_tsv_escapes_tab_and_carriage_return(srv):
+    """A tab or CR inside a literal is written as \\t / \\r (Turtle string
+    escapes), so it cannot split a row into extra fields or lines."""
+    q = urllib.parse.quote(
+        'SELECT ?s ?x WHERE { ?s wdt:P2 wd:Q3 . BIND("a\\tb\\rc" AS ?x) }'
+    )
+    status, _, body = _get(f"{srv}/query?query={q}&format=tsv")
+    assert status == 200
+    lines = body.rstrip("\n").split("\n")
+    assert lines[0] == "?s\t?x"
+    assert len(lines) == 3
+    for line in lines:
+        assert len(line.split("\t")) == 2, line
+    assert lines[1].endswith('\t"a\\tb\\rc"')
+
+
 def test_post_form_encoded(srv):
     """W3C SPARQL Protocol §2.1.2: POST with url-encoded query= body."""
     data = urllib.parse.urlencode(
@@ -295,6 +311,17 @@ def test_protocol_default_graph_uri_param(srv_ds):
     assert status == 200
     vals = [b["o"]["value"] for b in json.loads(body)["results"]["bindings"]]
     assert len(vals) == 1 and vals[0].endswith("Q9")
+
+
+def test_explain_honours_default_graph_uri(srv_ds):
+    """?explain= shows the plan that would run, so the Protocol dataset
+    parameters scope it the same way they scope the answer."""
+    q = urllib.parse.quote("SELECT ?o WHERE { wd:Q1 wdt:P2 ?o . }")
+    g = urllib.parse.quote(G1)
+    code, _, plain = _get(f"{srv_ds}/query?query={q}&explain=1")
+    code_ds, _, scoped = _get(f"{srv_ds}/query?query={q}&default-graph-uri={g}&explain=1")
+    assert code == code_ds == 200
+    assert G1 in scoped and G1 not in plain
 
 
 def test_result_cap_413(srv_ds):

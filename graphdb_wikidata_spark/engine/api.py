@@ -184,14 +184,16 @@ class GraphEngine:
         data-sized work behind one slow query. A fresh instance gives
         each compile private context with zero contention; the
         expensive state — per-predicate stats, the SERVICE registry and
-        its stats memo — is shared by reference (GIL-atomic dict ops;
-        a rare duplicate stats computation is idempotent), and freshly
-        computed stats are published back to the long-lived compiler."""
+        its stats memo, the star pivot Columns — is shared by reference
+        (GIL-atomic dict ops; a rare duplicate stats computation is
+        idempotent), and freshly computed stats are published back to
+        the long-lived compiler."""
         base = self._compiler
         c = Compiler(self.spark, self.statements, self.union_stmt_forms)
         c._pred_stats = base._pred_stats
         c.services = base.services
         c._svc_stats = base._svc_stats
+        c._star_cols = base._star_cols
         c.remote_allowed = base.remote_allowed
         return c
 

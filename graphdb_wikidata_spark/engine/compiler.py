@@ -86,6 +86,8 @@ class Compiler:
         # from THAT dataset, computed once per engine
         self.services: dict[str, DataFrame] = {}
         self._svc_stats: dict[str, "tuple[dict, int] | None"] = {}
+        # (predicates, object vars) -> star pivot Columns (_star_pivot)
+        self._star_cols: dict[tuple, tuple] = {}
         # HTTP federation opt-in (GraphEngine.allow_remote_services):
         # False = never touch the network (unregistered IRIs stay a
         # KeyError / SILENT unit solution); True = any http(s) SERVICE
@@ -370,15 +372,25 @@ class Compiler:
     ) -> tuple[list[tuple[int, DataFrame]], list[TriplePattern]]:
         """Subject-star rewrite (the 'property table' transform; the
         optional statements self-join rewrite of SURVEY §4.2): >=2
-        patterns sharing a subject variable, each with a distinct bound
-        direct predicate that is FUNCTIONAL (exactly one statement per
-        subject, proven from stats()) and a distinct plain object
-        variable, compile to ONE scan + groupBy(subject) with a
-        max(when(pred=p, obj)) column per pattern instead of N-1
-        subject self-joins. Exact join semantics: functionality rules
-        out fan-out, and the all-columns-bound filter reproduces the
-        inner join's drop of subjects missing a predicate. Each star is
-        one shuffle where the join form is N."""
+        patterns sharing a subject — a variable, or a bound entity or
+        statement term — each with a distinct bound direct predicate
+        that is FUNCTIONAL (exactly one statement per subject, proven
+        from stats()) and a distinct plain object variable, compile to
+        ONE scan + groupBy(subject) with a max(when(pred=p, obj)) column
+        per pattern instead of N-1 subject self-joins. Exact join
+        semantics: functionality rules out fan-out, and the
+        all-columns-bound filter reproduces the inner join's drop of
+        subjects missing a predicate. Each star is one shuffle where
+        the join form is N.
+
+        A bound subject (``wd:Qk wdt:P4 ?a ; wdt:P5 ?b``, the point
+        lookup the reference answers with one range read of its
+        subject-sorted order) adds the subject filter to the scan and
+        projects no subject column. On a store cached hash-partitioned
+        and sorted on the subject key (tpch_graph.materialized_
+        statements) the plan is one InMemoryTableScan and two
+        SortAggregates: no Exchange, no broadcast, no join — one Spark
+        job where the per-pattern scans cost a broadcast job each."""
         from collections import defaultdict
 
         if self._graph_ctx is not None:
@@ -397,24 +409,29 @@ class Compiler:
             # merged graphs, so take the exact join path
             return [], patterns
 
-        groups: dict[str, list[TriplePattern]] = defaultdict(list)
+        # keyed on the subject itself: a Var, or a bound entity /
+        # statement Term (both frozen dataclasses, never equal)
+        groups: dict[Var | Term, list[TriplePattern]] = defaultdict(list)
         rest: list[TriplePattern] = []
         for tp in patterns:
             if (
-                isinstance(tp.s, Var)
-                and isinstance(tp.o, Var)
-                and tp.o.name != tp.s.name
+                isinstance(tp.o, Var)
+                and (
+                    (isinstance(tp.s, Var) and tp.o.name != tp.s.name)
+                    or (isinstance(tp.s, Term) and tp.s.t in ("entity", "stmt"))
+                )
                 and isinstance(tp.p, Term)
                 and tp.p.t == "entity"
                 and tp.p.k == "P"
             ):
-                groups[tp.s.name].append(tp)
+                groups[tp.s].append(tp)
             else:
                 rest.append(tp)
         stars: list[tuple[int, DataFrame]] = []
-        for svar, tps in groups.items():
+        for subj, tps in groups.items():
             preds = [tp.p.e for tp in tps]
             ovars = [tp.o.name for tp in tps]
+            svar = subj.name if isinstance(subj, Var) else None
             if (
                 len(tps) < 2
                 or len(set(preds)) != len(preds)
@@ -424,62 +441,85 @@ class Compiler:
             ):
                 rest.extend(tps)
                 continue
-            from .scan import OBJ_LEGS, _graph_clause, _object_term
+            from .scan import _filter_subject, _graph_clause
 
             gcond, _ = _graph_clause(self._graph_ctx, self._dataset_ctx)
+            keep = (F.col("pred_kind") == "P") & F.col("pred_id").isin(preds) & gcond
+            if svar is None:
+                keep = keep & _filter_subject(subj)
             st = self.statements
             if "graph_id" not in self._cols(st):
                 st = st.withColumn("graph_id", F.lit(None).cast("string"))
-            st = st.filter(
-                (F.col("pred_kind") == "P") & F.col("pred_id").isin(preds) & gcond
-            )
-            # FLAT-LEG pivot (round-9, guide §2/§1.2): aggregate the raw
-            # statement columns per pattern and rebuild the term struct
-            # once per GROUP, instead of max() over a pre-built 11-field
-            # term struct per ROW. The struct-valued max forced a Sort +
-            # SortAggregate over full structs (struct buffers are not
-            # hash-aggregable) and paid the _object_term CASE tower for
-            # every input row; the flat form pays trivial when(pred=p,
-            # leg) projections per row and builds structs only for the
-            # #subjects surviving rows. Functionality (exactly one row
-            # per subject per pred, proven from stats()) makes each
-            # per-leg max pick that single row's field — bit-identical
-            # to the struct max. The hit marker reproduces the old
-            # "aggregated struct is not null" inner-join filter (a
-            # matched row always yields a non-null struct, even for the
-            # obj_type->'null' tag branch).
-            aggs = []
-            for i, p in enumerate(preds):
-                hit = F.col("pred_id") == p
-                aggs.append(F.max(F.when(hit, F.lit(1))).alias(f"__s{i}_hit"))
-                aggs.extend(
-                    F.max(F.when(hit, F.col(leg))).alias(f"__s{i}_{leg}")
-                    for leg in OBJ_LEGS
-                )
+            st = st.filter(keep)
+            aggs, cond, rebuilt = self._star_pivot(tuple(preds), tuple(ovars))
             star = st.groupBy("subject_kind", "subject_id", "subject_stmt").agg(*aggs)
-            cond = F.lit(True)
-            for i in range(len(preds)):
-                cond = cond & (F.col(f"__s{i}_hit") == 1)
-            rebuilt = [
-                _object_term(lambda leg, _i=i: F.col(f"__s{_i}_{leg}")).alias(v)
-                for i, v in enumerate(ovars)
-            ]
-            star = star.filter(cond).select(
-                F.when(
-                    F.col("subject_kind") == "stmt",
-                    make_term(t="stmt", s=F.col("subject_stmt")),
-                )
-                .otherwise(
-                    make_term(
-                        t="entity", k=F.col("subject_kind"), e=F.col("subject_id")
+            if svar is not None:  # a bound subject is not projected
+                rebuilt = [
+                    F.when(
+                        F.col("subject_kind") == "stmt",
+                        make_term(t="stmt", s=F.col("subject_stmt")),
                     )
-                )
-                .alias(svar),
-                *rebuilt,
-            )
-            self._remember(star, [svar, *ovars])
-            stars.append((min(self._pred_count(p) for p in preds), star))
+                    .otherwise(
+                        make_term(
+                            t="entity", k=F.col("subject_kind"), e=F.col("subject_id")
+                        )
+                    )
+                    .alias(svar),
+                    *rebuilt,
+                ]
+            star = star.filter(cond).select(*rebuilt)
+            self._remember(star, ovars if svar is None else [svar, *ovars])
+            # estimated like the patterns' own scans: a bound subject
+            # discounts each predicate's count as _estimate does
+            stars.append((min(self._estimate(tp) for tp in tps), star))
         return stars, rest
+
+    def _star_pivot(self, preds: tuple, ovars: tuple) -> tuple:
+        """(aggregates, all-patterns-hit filter, rebuilt object terms)
+        of a star on these predicates and object variables. They name
+        columns and predicate ids only — never the subject — so every
+        point lookup of one shape reuses them: building them is about
+        600 py4j calls, most of a star's compile time."""
+        from .scan import OBJ_LEGS, _object_term
+
+        key = (preds, ovars)
+        got = self._star_cols.get(key)
+        if got is not None:
+            return got
+        # FLAT-LEG pivot (round-9, guide §2/§1.2): aggregate the raw
+        # statement columns per pattern and rebuild the term struct
+        # once per GROUP, instead of max() over a pre-built 11-field
+        # term struct per ROW. The struct-valued max forced a Sort +
+        # SortAggregate over full structs (struct buffers are not
+        # hash-aggregable) and paid the _object_term CASE tower for
+        # every input row; the flat form pays trivial when(pred=p,
+        # leg) projections per row and builds structs only for the
+        # #subjects surviving rows. Functionality (exactly one row
+        # per subject per pred, proven from stats()) makes each
+        # per-leg max pick that single row's field — bit-identical
+        # to the struct max. The hit marker reproduces the old
+        # "aggregated struct is not null" inner-join filter (a
+        # matched row always yields a non-null struct, even for the
+        # obj_type->'null' tag branch).
+        aggs = []
+        for i, p in enumerate(preds):
+            hit = F.col("pred_id") == p
+            aggs.append(F.max(F.when(hit, F.lit(1))).alias(f"__s{i}_hit"))
+            aggs.extend(
+                F.max(F.when(hit, F.col(leg))).alias(f"__s{i}_{leg}")
+                for leg in OBJ_LEGS
+            )
+        cond = F.lit(True)
+        for i in range(len(preds)):
+            cond = cond & (F.col(f"__s{i}_hit") == 1)
+        rebuilt = [
+            _object_term(lambda leg, _i=i: F.col(f"__s{_i}_{leg}")).alias(v)
+            for i, v in enumerate(ovars)
+        ]
+        got = (aggs, cond, rebuilt)
+        if len(self._star_cols) < 256:  # bounded: shapes come from clients
+            self._star_cols[key] = got
+        return got
 
     def _c_bgp(self, op: Bgp) -> DataFrame:
         if not op.patterns:

@@ -24,17 +24,17 @@ class ResultTooLarge(RuntimeError):
 
 
 def _iter_rows(df: DataFrame, max_rows: "int | None"):
-    """Stream result rows to the driver partition-by-partition
-    (``toLocalIterator`` holds ONE partition's rows at a time, not the
-    whole result — the unbounded-``collect`` fix for `SELECT * {?s ?p
-    ?o}` over HTTP). With ``max_rows`` set, rows beyond the cap raise
-    ``ResultTooLarge`` (the limit+1 pushdown keeps Spark from computing
-    more than cap+1 rows)."""
-    it = (df if max_rows is None else df.limit(max_rows + 1)).toLocalIterator()
-    for n, row in enumerate(it):
-        if max_rows is not None and n >= max_rows:
-            raise ResultTooLarge(f"result exceeds max_rows={max_rows}")
-        yield row
+    """The result rows, fetched with ONE bounded collect: with
+    ``max_rows`` set, ``limit(max_rows + 1)`` keeps Spark from
+    computing more than cap+1 rows and a cap+1-th row raises
+    ``ResultTooLarge``. Every serialiser builds its whole body in
+    memory, so a per-partition iterator would hold no fewer rows; it
+    would cost one Spark job per partition, where the collect is one
+    job for a point lookup."""
+    rows = (df if max_rows is None else df.limit(max_rows + 1)).collect()
+    if max_rows is not None and len(rows) > max_rows:
+        raise ResultTooLarge(f"result exceeds max_rows={max_rows}")
+    return rows
 
 
 def _cell(c) -> "F.Column":
@@ -160,7 +160,9 @@ def to_sparql_xml(df: DataFrame, max_rows: "int | None" = None) -> str:
             if cell is None:
                 continue
             out.append(f"<binding name={quoteattr(v)}>")
-            val = escape(cell["value"])
+            # a raw CR would be read back as LF (XML end-of-line
+            # normalisation); the character reference survives it
+            val = escape(cell["value"], {"\r": "&#13;"})
             if cell["type"] == "uri":
                 out.append(f"<uri>{val}</uri>")
             elif cell["type"] == "bnode":

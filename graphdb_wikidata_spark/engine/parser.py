@@ -96,14 +96,30 @@ def tokenize(text: str) -> list[Token]:
     return out
 
 
-_ESCAPES = {"t": "\t", "n": "\n", "r": "\r", '"': '"', "'": "'", "\\": "\\"}
+#: SPARQL 1.1 ECHAR (grammar rule [160]); UCHAR is \uXXXX / \UXXXXXXXX
+_ECHAR = {
+    "t": "\t", "b": "\b", "n": "\n", "r": "\r", "f": "\f",
+    '"': '"', "'": "'", "\\": "\\",
+}
+_ESCAPE_RE = re.compile(r"\\(?:u([0-9A-Fa-f]{4})|U([0-9A-Fa-f]{8})|(.))", re.DOTALL)
+
+
+def _unescape(m: re.Match) -> str:
+    hexd = m.group(1) or m.group(2)
+    if hexd is not None:
+        cp = int(hexd, 16)
+        if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
+            raise SyntaxError(f"escape {m.group()!r} is not a Unicode character")
+        return chr(cp)
+    if m.group(3) not in _ECHAR:
+        raise SyntaxError(f"invalid escape {m.group()!r} in string literal")
+    return _ECHAR[m.group(3)]
 
 
 def _unquote(s: str) -> str:
     # long (triple-quoted) form may contain raw newlines and quotes
     n = 3 if s[:3] in ('"""', "'''") else 1
-    body = s[n:-n]
-    return re.sub(r"\\(.)", lambda m: _ESCAPES.get(m.group(1), m.group(1)), body)
+    return _ESCAPE_RE.sub(_unescape, s[n:-n])
 
 
 AGG_NAMES = {"COUNT", "SUM", "AVG", "MIN", "MAX", "GROUP_CONCAT", "SAMPLE"}

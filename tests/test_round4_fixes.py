@@ -11,6 +11,8 @@ from graphdb_wikidata_spark.engine.json_result import (
     ResultTooLarge,
     to_sparql_csv,
     to_sparql_json,
+    to_sparql_tsv,
+    to_sparql_xml,
 )
 from graphdb_wikidata_spark.model.schema import statements_from_quads
 
@@ -131,19 +133,21 @@ def test_no_protocol_params_is_unchanged(geng):
 
 
 def test_serializers_respect_max_rows(eng):
-    df = eng.sql("SELECT ?s ?o WHERE { ?s wdt:P1 ?o }")
-    with pytest.raises(ResultTooLarge):
-        to_sparql_json(df, max_rows=2)
-    with pytest.raises(ResultTooLarge):
-        to_sparql_csv(df, max_rows=1)
-    # at or under the cap: serializes normally
-    assert '"bindings"' in to_sparql_json(df, max_rows=3)
+    df = eng.sql("SELECT ?s ?o WHERE { ?s wdt:P1 ?o }")  # 3 rows
+    for serialize in (to_sparql_json, to_sparql_csv, to_sparql_tsv, to_sparql_xml):
+        for cap in (1, 2):
+            with pytest.raises(ResultTooLarge):
+                serialize(df, max_rows=cap)
+        # exactly at the cap, and under it: serializes normally
+        for cap in (3, 4):
+            out = serialize(df, max_rows=cap)
+            for value in ("apple", "zebra", "mango"):
+                assert value in out, (serialize.__name__, cap)
 
 
 def test_large_result_streams_without_collect(spark):
-    # a real 100k-row result through the streaming serializer:
-    # toLocalIterator fetches one partition at a time (no full-result
-    # collect on the driver), pinning the path end-to-end at that size
+    # a real 100k-row result through the one bounded collect that every
+    # serializer shares, pinning the path end-to-end at that size
     quads = [("Q1", "P1", f"v{i}", f"s{i}") for i in range(100_000)]
     e = GraphEngine(spark, statements_from_quads(spark, quads))
     out = to_sparql_csv(e.sql("SELECT ?o WHERE { ?s wdt:P1 ?o }"))

@@ -265,6 +265,25 @@ def test_xml_results_format(srv):
     assert lit_t.get("{http://www.w3.org/XML/1998/namespace}lang") == "en"
 
 
+def test_xml_literal_keeps_carriage_return(srv):
+    """CR inside a literal is written as &#13;: a raw CR would be read
+    back as LF by XML end-of-line normalisation."""
+    import xml.etree.ElementTree as ET
+
+    q = urllib.parse.quote('SELECT ?x WHERE { BIND("a\\rb\\r\\nc" AS ?x) }')
+    status, _, body = _get(f"{srv}/query?query={q}&format=xml")
+    assert status == 200
+    lit = ET.fromstring(body).find(".//{http://www.w3.org/2005/sparql-results#}literal")
+    assert lit.text == "a\rb\r\nc"
+
+
+def test_invalid_string_escape_400(srv):
+    q = urllib.parse.quote('SELECT ?x WHERE { BIND("a\\qb" AS ?x) }')
+    status, _, body = _get(f"{srv}/query?query={q}")
+    assert status == 400
+    assert "escape" in json.loads(body)["error"]
+
+
 def test_concurrent_queries(srv):
     """ThreadingHTTPServer + one shared SparkSession: parallel requests
     must all answer correctly (Spark schedules concurrent jobs from

@@ -7,6 +7,13 @@ import pytest
 
 from graphdb_wikidata_spark.session import get_spark
 
+# one JVM runs the whole suite: cap its heap at a quarter of RAM, at
+# most 4g (as sparqlbench does). The session default (48g) lets the heap
+# grow past a small machine's memory until the kernel's OOM killer ends
+# the JVM mid-suite; the test data are a few megabytes.
+_RAM = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(4, _RAM // 4 // 2**30))}g")
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
@@ -33,6 +40,30 @@ def wikidata_sample_statement_count() -> int:
             n += len(claims)
             n += sum(len(s) for c in claims for s in c.get("qualifiers", {}).values())
     return n
+
+
+def wikidata_sample_subject_statement_count(entity_id: str) -> int:
+    """The entity's own statements: its labels, descriptions, aliases and claims."""
+    (e,) = [e for e in wikidata_sample_entities() if e["id"] == entity_id]
+    return (
+        len(e["labels"])
+        + len(e["descriptions"])
+        + sum(len(vs) for vs in e["aliases"].values())
+        + sum(len(claims) for claims in e["claims"].values())
+    )
+
+
+def wikidata_sample_subject_count() -> int:
+    """Distinct subjects: the entities plus the claims that carry qualifier snaks."""
+    entities = wikidata_sample_entities()
+    qualified = sum(
+        1
+        for e in entities
+        for claims in e["claims"].values()
+        for c in claims
+        if any(c.get("qualifiers", {}).values())
+    )
+    return len(entities) + qualified
 
 
 @pytest.fixture(scope="session")

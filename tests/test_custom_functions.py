@@ -1,7 +1,8 @@
 """Custom SPARQL extension functions (GraphEngine.register_function) —
 the hook the reference declares but panics on (interpreter.rs:655-659,
 calc_engine.rs:2930). Covers Column-builder and pandas_udf
-registrations, every kind, and the unregistered-IRI error path.
+registrations, every kind, and the unregistered-IRI error path. The
+engine runs over the in-repo tests/data/wikidata_sample.json.
 
 Also pins the compat machinery's action-free compilation (VERDICT r02
 task 7): statically-determinable null masks must not launch Spark jobs
@@ -17,8 +18,9 @@ from pyspark.sql.functions import pandas_udf
 
 from graphdb_wikidata_spark.engine import GraphEngine
 from graphdb_wikidata_spark.engine.expressions import unregister_custom_function
+from tests.conftest import WIKIDATA_SAMPLE
 
-FIXTURE = "/root/reference/tests/data/first_5_lines.txt"
+FIXTURE = WIKIDATA_SAMPLE
 
 EX = "http://example.org/fn/"
 

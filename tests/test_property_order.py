@@ -7,7 +7,7 @@ re-checks the same laws, catching value-dependent edges the fixed
 matrix can't (sign boundaries, empty strings, equal-amount different
 -unit quantities, year-0/negative-year times). The reference's
 equivalent surface is DataValue::partial_cmp
-(/root/reference/src/data_types.rs:277-323).
+(the reference's src/data_types.rs:277-323).
 
 Each hypothesis example batches all pairs into ONE Spark job (cross
 join of the drawn term list), so example count, not term count, sets

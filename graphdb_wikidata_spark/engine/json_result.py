@@ -9,6 +9,7 @@ collected once — no per-row Python."""
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -21,6 +22,16 @@ _XSD = "http://www.w3.org/2001/XMLSchema#"
 class ResultTooLarge(RuntimeError):
     """Raised when a serialized result exceeds the caller's row cap
     (the HTTP server maps this to 413 Payload Too Large)."""
+
+
+class NotRepresentable(ValueError):
+    """Raised when a result value cannot be written in the requested
+    format (the HTTP server maps this to 406 Not Acceptable)."""
+
+
+# C0 controls other than TAB, LF and CR: XML 1.0 has no way to carry
+# them, not even as character references
+_XML_FORBIDDEN = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
 
 
 def _iter_rows(df: DataFrame, max_rows: "int | None"):
@@ -159,6 +170,13 @@ def to_sparql_xml(df: DataFrame, max_rows: "int | None" = None) -> str:
             cell = row[v]
             if cell is None:
                 continue
+            for text in (cell["value"], cell["xml:lang"], cell["datatype"]):
+                bad = _XML_FORBIDDEN.search(text or "")
+                if bad:
+                    raise NotRepresentable(
+                        f"SPARQL XML results cannot represent control character "
+                        f"U+{ord(bad.group()):04X} (in ?{v}); request JSON, CSV or TSV"
+                    )
             out.append(f"<binding name={quoteattr(v)}>")
             # a raw CR would be read back as LF (XML end-of-line
             # normalisation); the character reference survives it

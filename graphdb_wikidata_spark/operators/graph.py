@@ -7,20 +7,24 @@ shuffle join, the driver only counts iterations. localCheckpoint()
 truncates lineage so plans stay flat across rounds.
 
 Scale notes:
-- PageRank: one join + one aggregation per iteration, both keyed on
-  node id; ranks and degrees co-partition after the first shuffle so
-  AQE reuses the exchange. Dangling mass is redistributed uniformly.
+- PageRank: a superstep is one shuffle-hash join of the vertex state
+  with a loop-invariant weighted edge relation plus one group-by on
+  dst, the superstep's only exchange (Pregelix's join + combine). The
+  uniform dangling share rides a sentinel vertex, so there is no
+  per-round scalar, outer join or broadcast; lineage is cut every 5
+  supersteps. One Spark job per superstep, plus three per lineage cut.
 - Connected components: Shiloach-Vishkin-style component-level hooking
-  with a path-halving step (comp <- min(comp, comp[comp])) each round
-  — O(log n) rounds independent of graph diameter.
+  (one aggregate over the edges labelled with both endpoints'
+  components) with a path-halving step (comp <- min(comp, comp[comp]))
+  each round — O(log n) rounds independent of graph diameter.
 - BFS: frontier expansion with an anti-join against visited — the
   frontier shrinks geometrically on expander-ish graphs; each round
-  is one join.
+  is one join, and the hop's size rides its checkpoint job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-exported
@@ -29,6 +33,20 @@ from . import ORACLES, QUERIES, register  # noqa: F401 - QUERIES/ORACLES re-expo
 # --------------------------------------------------------------------------
 # algorithms (generic over an edges DataFrame with columns src, dst)
 # --------------------------------------------------------------------------
+
+
+def _non_null(edges: DataFrame) -> DataFrame:
+    """``src, dst`` without null endpoints. Columns the optimizer knows
+    to be non-null get no inferred ``isnotnull`` filter, so every scan
+    of a checkpoint derived from them plans identically and one
+    exchange of it is reused across the joins of a round."""
+    return edges.select("src", "dst").filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+
+
+#: id of PageRank's sentinel vertex, which carries the uniform dangling
+#: share; Long.MinValue, so it cannot collide with a real (non-negative)
+#: entity id
+_SENTINEL = -(2**63)
 
 
 def pagerank(
@@ -40,93 +58,93 @@ def pagerank(
     """Iterative PageRank -> (node, rank). Uniform init over the node
     set. ``dangling='redistribute'`` (canonical: sinks' mass spread
     uniformly, ranks sum to 1) or ``'drop'`` (sink mass leaks — the
-    variant with closed forms on simple graphs, used by the oracle)."""
-    # materialize the edge list once: every iteration (and every
-    # checkpoint job) would otherwise re-derive it from its source scan
-    edges = edges.localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+    variant with closed forms on simple graphs, used by the oracle).
+    Duplicate edges count with their multiplicity.
+
+    Each superstep is one join of the state with a loop-invariant
+    weighted edge relation and one group-by on ``dst`` — no outer
+    join, no per-round dangling aggregate. The state is ``(node, x)``
+    with ``rank = x + c``, where ``c`` is the uniform dangling share
+    held as the state of a sentinel vertex Z (id ``_SENTINEL``):
+
+    - ``u -> v`` weighs ``1/deg(u)``;
+    - ``Z -> v`` weighs ``W(v) = sum over u -> v of 1/deg(u)``, so
+      ``c`` reaches every in-edge, and every vertex gets a message;
+    - ``Z -> Z`` weighs 0: Z gets a message in every superstep;
+    - ``redistribute`` only: each dangling ``d`` adds ``d -> Z`` and one
+      more ``Z -> Z``, each weighing 1, so Z's sum is the dangling mass
+      ``sum over d of x(d) + c``; with ``drop``, ``c`` stays 0.
+
+    Update: ``x' = (1-damping)/n + damping*s`` and
+    ``c' = damping*s/n``. ``c`` is added back to every rank once, after
+    the last superstep; the edge relation is built and checkpointed
+    once. One Spark job per superstep, plus three per lineage cut.
+    An edge endpoint equal to the sentinel id raises ``ValueError``."""
+    z = F.lit(_SENTINEL)
+    edges = _non_null(edges)
+    # one row per vertex with its out-degree: one aggregate, no anti join
+    deg = (
+        edges.select(F.col("src").alias("node"), F.lit(1).alias("out"))
+        .unionByName(edges.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
+        .groupBy("node")
+        .agg(F.sum("out").alias("deg"))
     )
-    n = nodes.count()
-    # the out-degree join is loop-invariant: attach deg to each edge
-    # ONCE, outside the loop, so every iteration is one join (ranks x
-    # weighted edges) + one aggregation instead of two joins + one
-    # aggregation — 10 iterations save 10 shuffle-join stages (guide
-    # §2.4: two operations keyed the same way share one exchange; the
-    # per-edge 1/deg weight never changes between rounds)
-    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_w = edges.join(out_deg, "src").localCheckpoint()
-    # dangling node set is loop-invariant too: nodes with no out-edge
-    dangling_nodes = (
-        nodes.join(edges_w.select("src"), nodes["node"] == F.col("src"), "left_anti")
-        .localCheckpoint()
-        if dangling == "redistribute"
-        else None
+    real = edges.join(deg.withColumnRenamed("node", "src"), "src").select(
+        "src", "dst", (F.lit(1.0) / F.col("deg")).alias("w")
     )
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    in_w = real.groupBy("dst").agg(F.sum("w").alias("w"))
+    # Z -> v for every vertex, observed for n and for the sentinel id
+    obs = Observation()
+    to_all = (
+        deg.join(in_w, deg["node"] == in_w["dst"], "left")
+        .select(z.alias("src"), F.col("node").alias("dst"), F.coalesce(F.col("w"), F.lit(0.0)).alias("w"))
+        .observe(obs, F.count(F.lit(1)).alias("n"), F.count(F.when(F.col("dst") == z, 1)).alias("sentinel"))
+    )
+    spark = edges.sparkSession
+    weighted = real.unionByName(to_all).unionByName(
+        spark.range(1).select(z.alias("src"), z.alias("dst"), F.lit(0.0).alias("w"))
+    )
+    if dangling == "redistribute":
+        sinks = deg.filter(F.col("deg") == 0)
+        weighted = weighted.unionByName(
+            sinks.select(F.col("node").alias("src"), z.alias("dst"), F.lit(1.0).alias("w"))
+        ).unionByName(sinks.select(z.alias("src"), z.alias("dst"), F.lit(1.0).alias("w")))
+    weighted = weighted.localCheckpoint()
+    n, hits = obs.get["n"], obs.get["sentinel"]
+    if hits:
+        raise ValueError(f"pagerank: node id {_SENTINEL} is reserved for the sentinel vertex")
+
     base = (1.0 - damping) / n
+    state = (
+        weighted.filter((F.col("src") == z) & (F.col("dst") != z))
+        .select(F.col("dst").alias("node"), F.lit(1.0 / n).alias("x"))
+        .unionByName(spark.range(1).select(z.alias("node"), F.lit(0.0).alias("x")))
+    )
     for it in range(iterations):
-        contribs = (
-            ranks.join(edges_w, ranks["node"] == edges_w["src"], "inner")
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
+        # the state comes out of the previous group-by hash-partitioned
+        # on node, and a shuffle-hash join keeps it there: the group-by
+        # is the superstep's only exchange (AQE would otherwise turn the
+        # small join into a broadcast, re-planned every superstep)
+        s = (
+            state.hint("shuffle_hash").join(weighted, state["node"] == weighted["src"])
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.col("x") * F.col("w")).alias("s"))
         )
-        if dangling == "redistribute":
-            # dangling mass = total rank NOT held by nodes with
-            # out-edges. Computed as a one-row aggregate cross-joined
-            # (broadcast) into the update — NOT collected to the
-            # driver: the scalar rides inside the same job as the
-            # round's checkpoint, so redistribute costs zero extra
-            # actions per iteration (it used to do two driver
-            # aggregates per round); the dangling-node SET is
-            # precomputed outside the loop (semi join against the
-            # small invariant set, not an anti join against out_deg
-            # every round)
-            dangling_rank = (
-                ranks.join(dangling_nodes, "node", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dmass"))
-            )
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dangling_rank))
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("in_sum"), F.lit(0.0))
-                            + F.col("__dmass") / F.lit(float(n))
-                        )
-                    ).alias("rank"),
-                )
-            )
-        else:
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-        # lineage cut every 5th round. r02 bisected cadence 3 < 5, but
-        # that measurement was taken under the full-GC pause regime the
-        # round-9 ExplicitGCInvokesConcurrent fix removed (each extra
-        # checkpoint job was another chance to eat a pause); re-bisected
-        # post-fix on the chain bench: cadence 5 min 1.92s vs cadence 3
-        # min 2.13s vs cadence 10 min 2.09s (interleaved same-session
-        # mins of 5). Redistribute's dangling aggregate rides in the
-        # same plan either way.
+        state = s.select(
+            "node",
+            F.when(F.col("node") == z, F.lit(damping / n) * F.col("s"))
+            .otherwise(F.lit(base) + F.lit(damping) * F.col("s"))
+            .alias("x"),
+        )
+        # lineage cut every 5th superstep keeps the plan flat
         if it % 5 == 4 or it == iterations - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks
+            state = state.localCheckpoint()
+    share = state.filter(F.col("node") == z).select(F.col("x").alias("c"))
+    return (
+        state.filter(F.col("node") != z)
+        .crossJoin(F.broadcast(share))
+        .select("node", (F.col("x") + F.col("c")).alias("rank"))
+    )
 
 
 def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
@@ -137,20 +155,24 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     whole CURRENT components (every component hooks onto the smallest
     label among ALL its members' neighbors), so components pair up
     per round and the round count is O(log n) — independent of graph
-    DIAMETER. The previous min-label propagation moved labels ~2-3
-    edge-hops per round, i.e. O(diameter) rounds: fine for cliquish
-    near-dup clusters, pathological for the chained-boilerplate shape
-    a web crawl actually produces (measured on the 10x bench twin:
-    11 rounds / 13.2s -> 5 rounds / 6.4s, identical components).
+    DIAMETER. Min-label propagation would move labels ~2-3 edge-hops
+    per round, i.e. O(diameter) rounds: fine for cliquish near-dup
+    clusters, pathological for the chained-boilerplate shape a web
+    crawl actually produces (measured on the 10x bench twin: 11 rounds
+    / 13.2s -> 5 rounds / 6.4s, identical components).
+
+    The hooks are one aggregate: the undirected edges joined with both
+    endpoints' labels, filtered to ``cd < cs``, grouped by ``cs`` with
+    ``min(cd)``.
 
     Labels are node ids and per-node monotonically non-increasing, so
     the exact-decimal label sum strictly decreases until the fixpoint
     — convergence detection is one scan-agg over the checkpointed
     round result (no join against the previous round).
     """
+    edges = _non_null(edges)
     und = (
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .localCheckpoint()
     )
@@ -162,27 +184,19 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     )
     prev_sum = None
     for _ in range(max_iters):
-        # smallest neighbor label per node...
-        nbr_min = (
-            und.join(comp, und["dst"] == comp["node"], "inner")
-            .select(F.col("src").alias("node"), F.col("comp").alias("nbc"))
-            .groupBy("node")
-            .agg(F.min("nbc").alias("nbc"))
-        )
-        # ...hooked at COMPONENT granularity: the whole component
-        # adopts the smallest label adjacent to ANY of its members
+        # every CURRENT component adopts the smallest label adjacent to
+        # ANY of its members
+        cs = comp.select(F.col("node").alias("src"), F.col("comp").alias("cs"))
+        cd = comp.select(F.col("node").alias("dst"), F.col("comp").alias("cd"))
         hooks = (
-            comp.join(nbr_min, "node")
-            .groupBy("comp")
-            .agg(F.min("nbc").alias("target"))
-            .filter(F.col("target") < F.col("comp"))
-            .select(F.col("comp").alias("hc"), "target")
+            und.join(cs, "src")
+            .join(cd, "dst")
+            .filter(F.col("cd") < F.col("cs"))
+            .groupBy(F.col("cs").alias("hc"))
+            .agg(F.min("cd").alias("target"))
         )
         new = comp.join(hooks, comp["comp"] == F.col("hc"), "left").select(
-            "node",
-            F.least(F.col("comp"), F.coalesce(F.col("target"), F.col("comp"))).alias(
-                "comp"
-            ),
+            "node", F.coalesce(F.col("target"), F.col("comp")).alias("comp")
         )
         # path halving: comp <- comp[comp] flattens the hook chains
         c2 = new.select(F.col("node").alias("n2"), F.col("comp").alias("c2"))
@@ -191,15 +205,10 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
         # while persist() pins blocks in the cache manager until an
         # explicit unpersist — across 50 rounds that leak OOMs a
         # default-sized driver.
-        # Convergence detection RIDES the checkpoint job via observe()
-        # (round-9, guide §1.2 — same fold as the BPE trainer's
-        # remaining-sites probe): the former separate
-        # agg(sum).collect() was a second full scan-job per round;
-        # exact decimal (node-id sums overflow a long at ~2^63 total):
-        # equal sum <=> no label moved <=> hook fixpoint <=> every
-        # component uniformly labeled with its min id
-        from pyspark.sql import Observation
-
+        # Convergence detection rides the checkpoint job via observe(),
+        # in exact decimal (node-id sums overflow a long at ~2^63
+        # total): equal sum <=> no label moved <=> hook fixpoint <=>
+        # every component uniformly labeled with its min id
         obs = Observation()
         new = (
             new.join(c2, new["comp"] == c2["n2"], "left")
@@ -225,15 +234,19 @@ def bfs_distances(edges: DataFrame, source: int, max_iters: int = 50) -> DataFra
     visited = spark.createDataFrame([(source, 0)], "node long, dist int").localCheckpoint()
     frontier = visited
     for depth in range(1, max_iters + 1):
+        # the hop's size rides its checkpoint job: an empty frontier
+        # ends the search without a second job
+        obs = Observation()
         nxt = (
             frontier.join(edges, frontier["node"] == edges["src"], "inner")
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(depth))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
-        if nxt.limit(1).count() == 0:
+        if obs.get["n"] == 0:
             break
         # no checkpoint: visited is a flat union of checkpointed
         # frontier RDDs — nothing to recompute, and skipping it saves

@@ -4,6 +4,8 @@
 GET /            -> the static HTML frontend (reference frontend/index.html)
 GET /app.js      -> its script (reference frontend/app.js)
 GET /query?query=<SPARQL>  -> 200 W3C SPARQL-JSON | 400 parse error
+                              | 406 a value the format cannot carry
+                              | 413 over the row cap | 500 engine failure
 CORS: * (the reference sets permissive CORS for its HTML frontend).
 
 The server is a thin shell: all heavy lifting is the engine's
@@ -133,7 +135,7 @@ def make_handler(engine: GraphEngine, max_result_rows: "int | None" = 1_000_000)
                     return
                 self._reply(200, plan, "text/plain; charset=utf-8")
                 return
-            from .engine.json_result import ResultTooLarge
+            from .engine.json_result import NotRepresentable, ResultTooLarge
 
             try:
                 cap = max_result_rows
@@ -154,6 +156,14 @@ def make_handler(engine: GraphEngine, max_result_rows: "int | None" = 1_000_000)
                 # result bigger than the server's configured cap: 413
                 # rather than an unbounded driver-side materialization
                 self._reply(413, json.dumps({"error": str(e)}), "application/json")
+                return
+            except NotRepresentable as e:
+                # a value the requested format cannot carry (a control
+                # character in XML): the other formats still can
+                self._reply(406, json.dumps({"error": str(e)}), "application/json")
+                return
+            except Exception as e:  # engine-side failure: server error
+                self._reply(500, json.dumps({"error": f"query failed: {e}"}), "application/json")
                 return
             self._reply(200, body, ctype)
 

@@ -20,6 +20,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, at least 1g: a fixed large heap lets
+    the JVM grow past a small machine's memory until the kernel's OOM
+    killer ends it. ``SPARK_GRAFT_DRIVER_MEM`` overrides."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 4 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "graphdb-wikidata-spark",
     master: str | None = None,
@@ -50,7 +58,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory())
         # iterative algorithms localCheckpoint per round; the blocks of
         # dead checkpoints are only freed when the ContextCleaner sees
         # the RDD garbage-collected — at the default 30min periodic-GC
@@ -59,7 +67,7 @@ def get_spark(
         # identical CC runs). 5min bounds the accumulation window.
         .config("spark.cleaner.periodicGC.interval", "5min")
         # ...but that periodic System.gc() is a STOP-THE-WORLD full
-        # collection of a 48g heap by default — multi-second to ~30s
+        # collection of the whole driver heap by default — multi-second to ~30s
         # pauses that land in the middle of whatever query is running.
         # Round-9 measurement: queries showed 18-37s outliers on a
         # 0.5-1.3s steady state

@@ -7,13 +7,6 @@ import pytest
 
 from graphdb_wikidata_spark.session import get_spark
 
-# one JVM runs the whole suite: cap its heap at a quarter of RAM, at
-# most 4g (as sparqlbench does). The session default (48g) lets the heap
-# grow past a small machine's memory until the kernel's OOM killer ends
-# the JVM mid-suite; the test data are a few megabytes.
-_RAM = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(4, _RAM // 4 // 2**30))}g")
-
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 

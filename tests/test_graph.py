@@ -31,6 +31,63 @@ def test_pagerank_redistribute_sums_to_one(tri_plus_pair):
     assert ranks[11] > ranks[10]
 
 
+def _power_iteration(edges, iterations, damping, dangling):
+    """PageRank by direct power iteration over a multigraph edge list."""
+    nodes = sorted({v for e in edges for v in e})
+    n = len(nodes)
+    deg = {v: 0 for v in nodes}
+    for u, _ in edges:
+        deg[u] += 1
+    rank = {v: 1.0 / n for v in nodes}
+    for _ in range(iterations):
+        contrib = {v: 0.0 for v in nodes}
+        for u, v in edges:
+            contrib[v] += rank[u] / deg[u]
+        share = sum(rank[v] for v in nodes if deg[v] == 0) / n if dangling == "redistribute" else 0.0
+        rank = {v: (1.0 - damping) / n + damping * (contrib[v] + share) for v in nodes}
+    return rank
+
+
+@pytest.mark.parametrize("dangling", ["redistribute", "drop"])
+def test_pagerank_matches_power_iteration(spark, dangling):
+    # sinks 6, 7 and 8; 5 has no in-edge; 1 -> 2 twice; 4 -> 4 only
+    edges = [(1, 2), (1, 2), (2, 3), (3, 1), (3, 4), (4, 4), (5, 1), (1, 6), (3, 7), (2, 8)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["rank"] for r in pagerank(df, 12, 0.85, dangling=dangling).collect()}
+    want = _power_iteration(edges, 12, 0.85, dangling)
+    assert got.keys() == want.keys()
+    for v in want:
+        assert got[v] == pytest.approx(want[v], rel=1e-12, abs=0), (dangling, v)
+    if dangling == "redistribute":
+        assert sum(got.values()) == pytest.approx(1.0, rel=1e-12)
+
+
+@pytest.mark.parametrize("edge", [(-(2**63), 1), (1, -(2**63))])
+def test_pagerank_sentinel_id_raises(spark, edge):
+    df = spark.createDataFrame([edge, (1, 2)], "src long, dst long")
+    with pytest.raises(ValueError, match="sentinel"):
+        pagerank(df, 3)
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pagerank_superstep_jobs(spark, tri_plus_pair):
+    """A superstep is one aggregate exchange: five more supersteps,
+    one lineage cut among them, cost at most two Spark jobs each."""
+    ten = _jobs(spark, "pagerank-10", lambda: pagerank(tri_plus_pair, 10).collect())
+    five = _jobs(spark, "pagerank-5", lambda: pagerank(tri_plus_pair, 5).collect())
+    assert ten - five <= 10, (ten, five)
+
+
 def test_connected_components_two_islands(tri_plus_pair):
     comp = {r["node"]: r["comp"] for r in connected_components(tri_plus_pair).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}

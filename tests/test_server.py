@@ -277,6 +277,47 @@ def test_xml_literal_keeps_carriage_return(srv):
     assert lit.text == "a\rb\r\nc"
 
 
+def test_xml_control_character_406(srv):
+    """XML 1.0 cannot carry C0 controls other than TAB, LF and CR, not
+    even as character references: the XML format refuses such a
+    result with 406, and JSON still serves it."""
+    q = urllib.parse.quote('SELECT ?x WHERE { BIND("a\\u0001b" AS ?x) }')
+    status, headers, body = _get(f"{srv}/query?query={q}&format=xml")
+    assert status == 406
+    assert headers["Content-Type"] == "application/json"
+    assert "XML" in json.loads(body)["error"]
+    status, _, body = _get(f"{srv}/query?query={q}&format=json")
+    assert status == 200
+    (row,) = json.loads(body)["results"]["bindings"]
+    assert row["x"]["value"] == "a\u0001b"
+
+
+def test_engine_failure_500_then_serves(srv):
+    """An exception raised while a query executes answers 500 with a
+    JSON error, and the server keeps serving."""
+    from pyspark.sql import functions as F
+
+    from graphdb_wikidata_spark.engine.expressions import (
+        register_custom_function,
+        unregister_custom_function,
+    )
+
+    iri = "http://example.org/fn#fail"
+    register_custom_function(iri, lambda s: F.concat(s, F.raise_error(F.lit("boom"))))
+    try:
+        q = urllib.parse.quote(f"SELECT ?y WHERE {{ ?s wdt:P2 wdt:Q3 . BIND(<{iri}>(STR(?s)) AS ?y) }}")
+        status, headers, body = _get(f"{srv}/query?query={q}")
+    finally:
+        unregister_custom_function(iri)
+    assert status == 500
+    assert headers["Content-Type"] == "application/json"
+    assert "boom" in json.loads(body)["error"]
+    q = urllib.parse.quote("SELECT ?s WHERE { ?s wdt:P2 wdt:Q3 . }")
+    status, _, body = _get(f"{srv}/query?query={q}")
+    assert status == 200
+    assert len(json.loads(body)["results"]["bindings"]) == 2
+
+
 def test_invalid_string_escape_400(srv):
     q = urllib.parse.quote('SELECT ?x WHERE { BIND("a\\qb" AS ?x) }')
     status, _, body = _get(f"{srv}/query?query={q}")

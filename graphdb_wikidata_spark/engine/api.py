@@ -64,6 +64,9 @@ class GraphEngine:
         # closures execute data-sized work during compile)
         self._inflight: dict = {}
         self._svc_generation = 0
+        # (format, variable) -> result Column, shared by every request
+        # that projects the variable (json_result._result_columns)
+        self._result_cols: dict = {}
 
     @classmethod
     def from_parquet(cls, spark: SparkSession, path: str) -> "GraphEngine":
@@ -184,7 +187,8 @@ class GraphEngine:
         data-sized work behind one slow query. A fresh instance gives
         each compile private context with zero contention; the
         expensive state — per-predicate stats, the SERVICE registry and
-        its stats memo, the star pivot Columns — is shared by reference
+        its stats memo, the star pivot Columns, the label service's
+        tables and Columns — is shared by reference
         (GIL-atomic dict ops; a rare duplicate stats computation is
         idempotent), and freshly computed stats are published back to
         the long-lived compiler."""
@@ -194,6 +198,8 @@ class GraphEngine:
         c.services = base.services
         c._svc_stats = base._svc_stats
         c._star_cols = base._star_cols
+        c._label_tables = base._label_tables
+        c._label_join_cols = base._label_join_cols
         c.remote_allowed = base.remote_allowed
         return c
 
@@ -311,22 +317,22 @@ class GraphEngine:
         endpoint's response format, server.rs:87-141). ``max_rows``
         bounds the serialized result (ResultTooLarge beyond it);
         ``**ds`` forwards ``default_graphs``/``named_graphs``."""
-        return to_sparql_json(self.sql(query, **ds), max_rows)
+        return to_sparql_json(self.sql(query, **ds), max_rows, memo=self._result_cols)
 
     def sql_csv(self, query: str, max_rows: "int | None" = None, **ds) -> str:
         """SPARQL -> W3C SPARQL 1.1 CSV results (an extension; the
         reference serializes JSON only)."""
-        return to_sparql_csv(self.sql(query, **ds), max_rows)
+        return to_sparql_csv(self.sql(query, **ds), max_rows, memo=self._result_cols)
 
     def sql_tsv(self, query: str, max_rows: "int | None" = None, **ds) -> str:
         """SPARQL -> W3C SPARQL 1.1 TSV results (Turtle-style terms)."""
-        return to_sparql_tsv(self.sql(query, **ds), max_rows)
+        return to_sparql_tsv(self.sql(query, **ds), max_rows, memo=self._result_cols)
 
     def sql_xml(self, query: str, max_rows: "int | None" = None, **ds) -> str:
         """SPARQL -> W3C SPARQL Query Results XML."""
         from .json_result import to_sparql_xml
 
-        return to_sparql_xml(self.sql(query, **ds), max_rows)
+        return to_sparql_xml(self.sql(query, **ds), max_rows, memo=self._result_cols)
 
     def scan_pattern(self, s, p, o) -> DataFrame:
         """Single triple-pattern scan; each argument is a Var, a Term,

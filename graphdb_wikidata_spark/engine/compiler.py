@@ -88,6 +88,12 @@ class Compiler:
         self._svc_stats: dict[str, "tuple[dict, int] | None"] = {}
         # (predicates, object vars) -> star pivot Columns (_star_pivot)
         self._star_cols: dict[tuple, tuple] = {}
+        # the label service's per-engine state (_label_table,
+        # _label_cols): the graph it may keep tables of, (langs, kind)
+        # -> checkpointed ranked term table, base var -> join Columns
+        self._engine_statements = statements
+        self._label_tables: dict[tuple, DataFrame] = {}
+        self._label_join_cols: dict[str, tuple] = {}
         # HTTP federation opt-in (GraphEngine.allow_remote_services):
         # False = never touch the network (unregistered IRIs stay a
         # KeyError / SILENT unit solution); True = any http(s) SERVICE
@@ -1461,22 +1467,62 @@ class Compiler:
         getDescription point lookups (calc_engine.rs:2685-2908): first
         language in the requested list that has a term wins; no term in
         any requested language -> NULL (the reference returns Null)."""
+        df = self.compile(op.input)
+        for new_var, base, kind in op.targets:
+            bk, be, cond, term = self._label_cols(base)
+            df = (
+                df.withColumn("__bk", bk)
+                .withColumn("__be", be)
+                .join(self._label_table(op.langs, kind), cond, "left")
+                .withColumn(new_var, term)
+                .drop("__bk", "__be", "__tk", "__te", "__tv")
+            )
+        return df
+
+    def _label_cols(self, base: str) -> tuple:
+        """(subject key, entity id, join condition, label term) of a
+        label join on ``base``. They name columns only, so every label
+        request reuses them. The flat key columns are materialized
+        before the join: struct-field extraction inside join conditions
+        trips nested-pruning bugs (see _keyed_join)."""
+        got = self._label_join_cols.get(base)
+        if got is None:
+            got = (
+                F.col(base)["k"],
+                F.col(base)["e"],
+                (F.col("__bk") == F.col("__tk")) & (F.col("__be") == F.col("__te")),
+                F.when(
+                    F.col("__tv").isNotNull(),
+                    make_term(t="str", k="string", s=F.col("__tv")),
+                ),
+            )
+            if len(self._label_join_cols) < 256:  # bounded: names come from clients
+                self._label_join_cols[base] = got
+        return got
+
+    def _label_table(self, langs: tuple, kind: str) -> DataFrame:
+        """(__tk, __te, __tv): each subject's best term of ``kind`` in
+        the first of ``langs`` that has one. On the engine's own
+        default graph the table is built once per (langs, kind) and
+        kept checkpointed (localCheckpoint: its blocks are freed with
+        the DataFrame, where persist() pins them until an unpersist);
+        under a FROM dataset or inside a SERVICE it is built per
+        query."""
         from pyspark.sql.window import Window
 
-        from ..model.schema import make_term
-
-        df = self.compile(op.input)
-        langs = list(op.langs)
-        prio = F.array_position(
-            F.array(*[F.lit(x) for x in langs]), F.col("__tl")
-        )
         # the label lookup scans the DEFAULT graph: under a FROM
         # dataset that is the merged (set-union) graph — same collapse
         # as scan_pattern, so an alias edge present in two FROM graphs
         # concatenates once, not twice
         src = self.statements
-        if "graph_id" in src.columns:
-            if self._dataset_ctx is not None and self._dataset_ctx[0] is not None:
+        merged = self._dataset_ctx is not None and self._dataset_ctx[0] is not None
+        shared = src is self._engine_statements and not merged
+        if shared:
+            got = self._label_tables.get((langs, kind))
+            if got is not None:
+                return got
+        if "graph_id" in self._cols(src):
+            if merged:
                 from .scan import merged_default_graph
 
                 src = merged_default_graph(src, self._dataset_ctx[0])
@@ -1485,51 +1531,36 @@ class Compiler:
                 gdefault = F.col("graph_id").isNull()
         else:
             gdefault = F.lit(True)
-        for new_var, base, kind in op.targets:
-            terms = (
-                src.filter(
-                    (F.col("pred_kind") == kind)
-                    & F.col("pred_lang").isin(langs)
-                    & gdefault
-                )
-                .select(
-                    F.col("subject_kind").alias("__tk"),
-                    F.col("subject_id").alias("__te"),
-                    F.col("pred_lang").alias("__tl"),
-                    F.col("obj_string").alias("__tv"),
-                )
+        terms = (
+            src.filter(
+                (F.col("pred_kind") == kind)
+                & F.col("pred_lang").isin(list(langs))
+                & gdefault
             )
-            if kind == "alias":
-                # getAlias concatenates ALL aliases of the winning
-                # language (calc_engine.rs:2892-2908); sorted for
-                # distributed determinism
-                terms = terms.groupBy("__tk", "__te", "__tl").agg(
-                    F.array_join(F.array_sort(F.collect_list("__tv")), ", ").alias("__tv")
-                )
-            w = Window.partitionBy("__tk", "__te").orderBy(prio, F.col("__tv"))
-            best = (
-                terms.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .select("__tk", "__te", "__tv")
+            .select(
+                F.col("subject_kind").alias("__tk"),
+                F.col("subject_id").alias("__te"),
+                F.col("pred_lang").alias("__tl"),
+                F.col("obj_string").alias("__tv"),
             )
-            # flat key columns materialized pre-join (struct-field
-            # extraction inside join conditions trips nested-pruning
-            # bugs; see _keyed_join)
-            df = (
-                df.withColumn("__bk", F.col(base)["k"])
-                .withColumn("__be", F.col(base)["e"])
-                .join(
-                    best,
-                    (F.col("__bk") == best["__tk"]) & (F.col("__be") == best["__te"]),
-                    "left",
-                )
-                .withColumn(
-                    new_var,
-                    F.when(
-                        F.col("__tv").isNotNull(),
-                        make_term(t="str", k="string", s=F.col("__tv")),
-                    ),
-                )
-                .drop("__bk", "__be", "__tk", "__te", "__tv")
+        )
+        if kind == "alias":
+            # getAlias concatenates ALL aliases of the winning
+            # language (calc_engine.rs:2892-2908); sorted for
+            # distributed determinism
+            terms = terms.groupBy("__tk", "__te", "__tl").agg(
+                F.array_join(F.array_sort(F.collect_list("__tv")), ", ").alias("__tv")
             )
-        return df
+        prio = F.array_position(F.array(*[F.lit(x) for x in langs]), F.col("__tl"))
+        w = Window.partitionBy("__tk", "__te").orderBy(prio, F.col("__tv"))
+        best = (
+            terms.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select("__tk", "__te", "__tv")
+        )
+        if shared:
+            best = best.localCheckpoint()
+            if len(self._label_tables) >= 8:  # bounded: langs come from clients
+                self._label_tables.pop(list(self._label_tables)[0], None)
+            self._label_tables[(langs, kind)] = best
+        return best

@@ -4,7 +4,9 @@ to_json_result.rs:33-103 + RDF term rendering data_types.rs:69-242).
 Builds {"head": {"vars": [...]}, "results": {"bindings": [...]}} where
 each cell is {"type": uri|literal, "value": ..., "xml:lang"?,
 "datatype"?}. The per-cell struct is computed as a JVM expression and
-collected once — no per-row Python."""
+collected once — no per-row Python. Every serialiser takes an optional
+``memo`` dict that keeps the variables' result Columns across calls
+(``_result_columns``); ``GraphEngine`` passes one per engine."""
 
 from __future__ import annotations
 
@@ -32,6 +34,31 @@ class NotRepresentable(ValueError):
 # C0 controls other than TAB, LF and CR: XML 1.0 has no way to carry
 # them, not even as character references
 _XML_FORBIDDEN = re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
+
+
+#: bound on a memo of result Columns: variable names come from clients
+_MEMO_MAX = 1024
+
+
+def _result_columns(
+    df: DataFrame, fmt: str, build, memo: "dict | None"
+) -> "tuple[list[str], list]":
+    """The variables of ``df`` and their ``build``-ed result Columns,
+    aliased to the variables. The Columns are built from ``F.col(v)``,
+    which resolves by name, so one Column serves every DataFrame that
+    has the variable: ``memo`` keeps them per (format, variable) across
+    calls. Building one is 100-400 py4j calls, most of a point
+    request's driver work."""
+    vars_ = df.columns
+    cols = []
+    for v in vars_:
+        col = None if memo is None else memo.get((fmt, v))
+        if col is None:
+            col = build(F.col("`" + v.replace("`", "``") + "`")).alias(v)
+            if memo is not None and len(memo) < _MEMO_MAX:
+                memo[(fmt, v)] = col
+        cols.append(col)
+    return vars_, cols
 
 
 def _iter_rows(df: DataFrame, max_rows: "int | None"):
@@ -76,14 +103,16 @@ def _cell(c) -> "F.Column":
     )
 
 
-def to_sparql_csv(df: DataFrame, max_rows: "int | None" = None) -> str:
+def to_sparql_csv(
+    df: DataFrame, max_rows: "int | None" = None, memo: "dict | None" = None
+) -> str:
     """W3C SPARQL 1.1 Query Results CSV format: header row of bare
     variable names, cells are the plain lexical/IRI form (no term
     quoting), RFC 4180 field quoting, CRLF line endings, unbound ->
     empty field. An extension over the reference, which serializes
     JSON only (to_json_result.rs)."""
-    vars_ = df.columns
-    rows = _iter_rows(df.select(*[render(df[v]).alias(v) for v in vars_]), max_rows)
+    vars_, cols = _result_columns(df, "csv", render, memo)
+    rows = _iter_rows(df.select(*cols), max_rows)
 
     def field(s: str | None) -> str:
         if s is None:
@@ -119,19 +148,23 @@ def _tsv_term(c) -> "F.Column":
     )
 
 
-def to_sparql_tsv(df: DataFrame, max_rows: "int | None" = None) -> str:
+def to_sparql_tsv(
+    df: DataFrame, max_rows: "int | None" = None, memo: "dict | None" = None
+) -> str:
     """W3C SPARQL 1.1 Query Results TSV format: header of ?-prefixed
     variables, cells in Turtle-style term syntax, unbound -> empty."""
-    vars_ = df.columns
-    rows = _iter_rows(df.select(*[_tsv_term(df[v]).alias(v) for v in vars_]), max_rows)
+    vars_, cols = _result_columns(df, "tsv", _tsv_term, memo)
+    rows = _iter_rows(df.select(*cols), max_rows)
     lines = ["\t".join("?" + v for v in vars_)]
     lines += ["\t".join(row[v] if row[v] is not None else "" for v in vars_) for row in rows]
     return "\n".join(lines) + "\n"
 
 
-def to_sparql_json(df: DataFrame, max_rows: "int | None" = None) -> str:
-    vars_ = df.columns
-    cells = df.select(*[_cell(df[v]).alias(v) for v in vars_])
+def to_sparql_json(
+    df: DataFrame, max_rows: "int | None" = None, memo: "dict | None" = None
+) -> str:
+    vars_, cols = _result_columns(df, "cell", _cell, memo)
+    cells = df.select(*cols)
     bindings = []
     for row in _iter_rows(cells, max_rows):
         b = {}
@@ -149,15 +182,17 @@ def to_sparql_json(df: DataFrame, max_rows: "int | None" = None) -> str:
     return json.dumps({"head": {"vars": vars_}, "results": {"bindings": bindings}})
 
 
-def to_sparql_xml(df: DataFrame, max_rows: "int | None" = None) -> str:
+def to_sparql_xml(
+    df: DataFrame, max_rows: "int | None" = None, memo: "dict | None" = None
+) -> str:
     """W3C SPARQL Query Results XML Format (an extension — the
     reference serializes JSON only, to_json_result.rs:70-103). Reuses
     the same per-cell typed rendering as the JSON sink, so a cell is
     identical across formats."""
     from xml.sax.saxutils import escape, quoteattr
 
-    vars_ = df.columns
-    cells = df.select(*[_cell(df[v]).alias(v) for v in vars_])
+    vars_, cols = _result_columns(df, "cell", _cell, memo)
+    cells = df.select(*cols)
     out = ['<?xml version="1.0"?>']
     out.append('<sparql xmlns="http://www.w3.org/2005/sparql-results#">')
     out.append("<head>")

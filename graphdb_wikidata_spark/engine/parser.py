@@ -1123,4 +1123,23 @@ class _EAgg(Expr):
 
 
 def parse_query(text: str) -> Op:
-    return Parser(text).parse_query()
+    parser = Parser(text)
+    op = parser.parse_query()
+    _refuse_case_colliding_variables(parser.tokens)
+    return op
+
+
+def _refuse_case_colliding_variables(tokens: list[Token]) -> None:
+    """SPARQL variables are case-sensitive but Spark resolves column
+    names case-insensitively: ?x and ?X would read one column (or fail
+    as an ambiguous reference), so such a query is refused."""
+    seen: dict[str, str] = {}
+    for t in tokens:
+        if t.kind == "VAR":
+            name = t.value[1:]
+            other = seen.setdefault(name.casefold(), name)
+            if other != name:
+                raise NotImplementedError(
+                    f"variables ?{other} and ?{name} differ only in case; "
+                    "this engine resolves variables case-insensitively"
+                )

@@ -325,6 +325,19 @@ def test_invalid_string_escape_400(srv):
     assert "escape" in json.loads(body)["error"]
 
 
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT ?X WHERE { wd:Q31 wdt:P31 ?X . BIND(1 AS ?x) }",
+        "SELECT ?a ?A WHERE { BIND(1 AS ?a) BIND(2 AS ?A) }",
+    ],
+)
+def test_variables_differing_only_in_case_400(srv, query):
+    status, _, body = _get(f"{srv}/query?query={urllib.parse.quote(query)}")
+    assert status == 400
+    assert "differ only in case" in json.loads(body)["error"]
+
+
 def test_concurrent_queries(srv):
     """ThreadingHTTPServer + one shared SparkSession: parallel requests
     must all answer correctly (Spark schedules concurrent jobs from

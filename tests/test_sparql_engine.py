@@ -224,6 +224,23 @@ def test_ask_query(engine):
     assert engine.sql("ASK { wdt:Q31 wdt:P999999 ?x }").count() == 0
 
 
+@pytest.mark.parametrize(
+    "query",
+    [
+        "SELECT ?X WHERE { wd:Q31 wdt:P31 ?X . BIND(1 AS ?x) }",
+        "SELECT ?a ?A WHERE { BIND(1 AS ?a) BIND(2 AS ?A) }",
+    ],
+)
+def test_variables_differing_only_in_case_refused(engine, query):
+    """Spark resolves column names case-insensitively: ?X and ?x would
+    share one column (the first query answered "1" twice), so the
+    query is refused instead of answered wrongly."""
+    with pytest.raises(NotImplementedError, match="differ only in case"):
+        engine.sql(query)
+    rows = engine.sql("SELECT ?X WHERE { wd:Q31 wdt:P31 ?X . BIND(1 AS ?y) }").collect()
+    assert sorted(r["X"]["e"] for r in rows) == [6256, 3624078]
+
+
 def test_label_service(spark):
     """SERVICE wikibase:label: language priority, alias concatenation,
     NULL when no term exists in a requested language (the reference's

@@ -278,11 +278,16 @@ class Parser:
 
     # ---- SELECT
     def parse_select_query(self) -> Op:
+        # a label SERVICE rewrites only the SELECT whose body holds it:
+        # a subquery starts with none and gives back the enclosing one's
+        outer_langs, self._label_langs = self._label_langs, []
         spec = self.parse_select_clause()
         ds = self.parse_dataset_clauses()
         self.accept("WHERE")
         pattern = self.parse_group_graph_pattern()
-        return self._wrap_dataset(self.finish_select(spec, pattern), ds)
+        op = self._wrap_dataset(self.finish_select(spec, pattern), ds)
+        self._label_langs = outer_langs
+        return op
 
     def parse_select_clause(self) -> SelectSpec:
         self.expect("SELECT")

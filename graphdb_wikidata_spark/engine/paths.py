@@ -8,11 +8,13 @@ SPARQL 1.1 §9.1).
 - alternative  -> union
 - zero_or_one  -> union with the identity mapping
 - negated (!)  -> scan with predicate not-in set
-- zero/one_or_more (* +) -> iterative frontier expansion (distributed
-  semi-naive transitive closure): frontier = frontier JOIN step MINUS
-  seen, localCheckpoint per iteration to cut lineage. This is the one
-  operator with no declarative Spark primitive (SURVEY §7 M4) — the
-  loop is driver-side but every step is a full cluster-parallel join.
+- zero/one_or_more (* +) -> BFS from a bound endpoint, otherwise the
+  global closure (pointer doubling, or semi-naive delta iteration for
+  big step relations). The BFS and the semi-naive closure both run
+  operators.graph.frontier_search, the package's one frontier loop.
+  This is the one operator with no declarative Spark primitive (SURVEY
+  §7 M4) — the loop is driver-side but every step is a full
+  cluster-parallel join.
 
 GRAPH ?g around a path runs as ONE grouped closure: every pair carries
 a flat graph key and the iterative joins key on (graph, node), so the
@@ -30,6 +32,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators import graph as graph_ops
 from .algebra import PathExpr, PathPattern, TriplePattern, Var
 from .terms import Term
 
@@ -208,30 +211,24 @@ def _negated_pairs(
 SEMINAIVE_THRESHOLD = 250_000
 
 
-def _transitive_closure(
-    step: DataFrame,
-    s: str,
-    o: str,
-    mode: str = "auto",
-    max_rounds: int | None = None,
-    group: tuple[str, ...] = (),
-) -> DataFrame:
-    """Transitive closure, two physical strategies:
+def _transitive_closure(step: DataFrame, s: str, o: str, group: tuple[str, ...] = ()) -> DataFrame:
+    """Transitive closure; the step relation's size picks one of two
+    physical strategies:
 
-    - ``doubling``: each round composes the closure-so-far with itself
-      (paths of length <=2^k after round k) — ceil(log2 d) rounds for a
-      diameter-d graph. Right when the step relation (and hence the
-      closure) is small: rounds, not per-round work, dominate, since
-      every round is a cluster-wide shuffle.
-    - ``seminaive``: classic delta iteration — each round extends only
-      the pairs DISCOVERED LAST ROUND by one base step (delta JOIN step,
-      anti-join seen). d rounds, but per-round work is |delta|x|step|,
-      never |closure|x|closure|. Right for big graphs with short
-      diameters (the Wikidata P279*/P131* shape: tens of millions of
-      edges, diameter ~30): doubling's self-join of a 10^8-pair closure
-      is the scale-killer, not the round count.
-    - ``auto`` (default): seminaive when the step relation exceeds
-      SEMINAIVE_THRESHOLD rows, doubling otherwise.
+    - pointer doubling (at most SEMINAIVE_THRESHOLD step rows): each
+      round composes the closure-so-far with itself (paths of length
+      <=2^k after round k) — ceil(log2 d) rounds for a diameter-d
+      graph. Right when the step relation (and hence the closure) is
+      small: rounds, not per-round work, dominate, since every round is
+      a cluster-wide shuffle.
+    - semi-naive delta iteration (above it): a ``frontier_search`` over
+      pairs from the step relation — each hop extends only the pairs
+      DISCOVERED LAST HOP by one base step (delta JOIN step, anti-join
+      seen). d hops, but per-hop work is |delta|x|step|, never
+      |closure|x|closure|. Right for big graphs with short diameters
+      (the Wikidata P279*/P131* shape: tens of millions of edges,
+      diameter ~30): doubling's self-join of a 10^8-pair closure is the
+      scale-killer, not the round count.
 
     ``group`` columns (the flat graph key of a GRAPH ?var closure) join
     and dedup alongside the endpoints: ONE closure loop covers every
@@ -242,7 +239,7 @@ def _transitive_closure(
     struct join keys + downstream nested-field extraction trip a
     Catalyst binding bug (see Compiler._keyed_join), and flat string
     keys hash cheaper at shuffle time anyway. localCheckpoint()
-    truncates lineage per round in both modes."""
+    truncates lineage per round in both strategies."""
     gcols = list(group)
     out_cols = [s, o, *gcols]
 
@@ -253,44 +250,25 @@ def _transitive_closure(
 
     paths = with_key(step.select(*out_cols)).dropDuplicates(["__pk"]).localCheckpoint()
     n = paths.count()
-    if mode == "auto":
-        mode = "seminaive" if n > SEMINAIVE_THRESHOLD else "doubling"
-
     join_on = ["__mid", *gcols]
 
-    if mode == "seminaive":
-        # run until the delta is empty — diameter is data, not a
-        # constant, so a fixed round count would silently truncate the
-        # closure (same rationale as _reachable_from); the cap is a
-        # runaway bound only and raising beats returning a wrong answer
-        rounds = 65_536 if max_rounds is None else max_rounds
-        base = paths  # deduped one-step relation, checkpointed
-        delta = paths
-        for _ in range(rounds):
-            extended = (
+    if n > SEMINAIVE_THRESHOLD:
+        base = paths.select(*gcols, F.col(s).alias("__mid"), F.col(o))
+
+        def expand(delta: DataFrame, hop: int) -> DataFrame:
+            return with_key(
                 delta.select(*gcols, F.col(s), F.col(o).alias("__mid"))
-                .join(base.select(*gcols, F.col(s).alias("__mid"), F.col(o)), on=join_on)
+                .join(base, on=join_on)
                 .select(*out_cols)
             )
-            new = (
-                with_key(extended)
-                .dropDuplicates(["__pk"])
-                .join(paths.select("__pk"), on="__pk", how="left_anti")
-                .localCheckpoint()
-            )
-            if new.limit(1).count() == 0:
-                break
-            paths = paths.unionByName(new).localCheckpoint()
-            delta = new
-        else:
-            raise RuntimeError(
-                f"transitive closure did not converge within {rounds} rounds"
-                " — raise max_rounds if the graph really is this deep"
-            )
-        return paths.drop("__pk")
 
-    rounds = 20 if max_rounds is None else max_rounds  # diameter up to 2^20
-    for _ in range(rounds):
+        closure, drained = graph_ops.frontier_search(paths, expand, ["__pk"])
+        if not drained:
+            raise RuntimeError(f"transitive closure did not drain within {graph_ops.MAX_HOPS} hops")
+        return closure.drop("__pk")
+
+    # 2^20 > SEMINAIVE_THRESHOLD >= the diameter: the cap is never reached
+    for _ in range(20):
         doubled = (
             paths.select(*gcols, F.col(s), F.col(o).alias("__mid"))
             .join(paths.select(*gcols, F.col(s).alias("__mid"), F.col(o)), on=join_on)
@@ -309,57 +287,34 @@ def _transitive_closure(
     return paths.drop("__pk")
 
 
-def _reachable_from(
-    step: DataFrame,
-    s: str,
-    o: str,
-    src_col,
-    max_rounds: int = 4096,
-    group: tuple[str, ...] = (),
-) -> DataFrame:
-    """Nodes reachable in >= 1 step from a bound source: frontier BFS,
-    NOT the global closure — with a bound endpoint the work is the
+def _reachable_from(step: DataFrame, s: str, o: str, src_col, group: tuple[str, ...] = ()) -> DataFrame:
+    """Nodes reachable in >= 1 step from a bound source: a
+    ``frontier_search`` over the step relation (materialised once), NOT
+    the global closure — with a bound endpoint the work is the
     reachable subgraph, however large the full graph is. With ``group``
     columns the BFS runs over every graph at once, keyed (graph, node).
-    The loop exits on an empty frontier; max_rounds is a runaway bound
-    only (a 50-ish cap would silently truncate deep chains — diameter
-    is data, not a constant)."""
+    A search that has not drained within MAX_HOPS hops raises."""
     gcols = list(group)
-    key = lambda c: F.to_json(  # noqa: E731
-        F.struct(c.alias("v"), *[F.col(x) for x in gcols])
-    )
-    visited = (
-        step.filter(step[s].eqNullSafe(src_col))
-        .select(o, *gcols)
-        .withColumn("__nk", key(F.col(o)))
-        .dropDuplicates(["__nk"])
-        .localCheckpoint()
-    )
-    frontier = visited
-    for _ in range(max_rounds):
-        hop = frontier.select(
+    step = step.select(s, o, *gcols).localCheckpoint()
+
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.select(o, *gcols).withColumn(
+            "__nk", F.to_json(F.struct(F.col(o).alias("v"), *[F.col(x) for x in gcols]))
+        )
+
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        hop_from = frontier.select(
             F.col(o).alias("__from"), *[F.col(c).alias(f"__f_{c}") for c in gcols]
         )
         cond = F.col("__from").eqNullSafe(step[s])
         for c in gcols:
             cond = cond & (F.col(f"__f_{c}") == step[c])
-        nxt = (
-            hop.join(step, cond)
-            .select(o, *gcols)
-            .withColumn("__nk", key(F.col(o)))
-            .dropDuplicates(["__nk"])
-            .join(visited.select("__nk"), on="__nk", how="left_anti")
-            .localCheckpoint()
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    else:
-        raise RuntimeError(
-            f"BFS frontier did not drain within {max_rounds} rounds"
-            " — raise max_rounds if the graph really is this deep"
-        )
+        return keyed(hop_from.join(step, cond))
+
+    seed = keyed(step.filter(step[s].eqNullSafe(src_col))).dropDuplicates(["__nk"])
+    visited, drained = graph_ops.frontier_search(seed, expand, ["__nk"])
+    if not drained:
+        raise RuntimeError(f"BFS frontier did not drain within {graph_ops.MAX_HOPS} hops")
     return visited.drop("__nk")
 
 

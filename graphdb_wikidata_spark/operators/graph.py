@@ -17,9 +17,10 @@ Scale notes:
   (one aggregate over the edges labelled with both endpoints'
   components) with a path-halving step (comp <- min(comp, comp[comp]))
   each round — O(log n) rounds independent of graph diameter.
-- BFS: frontier expansion with an anti-join against visited — the
-  frontier shrinks geometrically on expander-ish graphs; each round
-  is one join, and the hop's size rides its checkpoint job.
+- BFS: ``frontier_search``, the one frontier loop (harmonic
+  centrality's and the SPARQL property paths' too): a hop joins the
+  frontier with the edges and anti-joins against visited, and its size
+  rides its checkpoint job. 5-7 Spark jobs a hop.
 """
 
 from __future__ import annotations
@@ -227,32 +228,61 @@ def connected_components(edges: DataFrame, max_iters: int = 50) -> DataFrame:
     )
 
 
-def bfs_distances(edges: DataFrame, source: int, max_iters: int = 50) -> DataFrame:
-    """Single-source BFS hop distances -> (node, dist)."""
-    spark = edges.sparkSession
-    edges = edges.localCheckpoint()
-    visited = spark.createDataFrame([(source, 0)], "node long, dist int").localCheckpoint()
-    frontier = visited
-    for depth in range(1, max_iters + 1):
-        # the hop's size rides its checkpoint job: an empty frontier
-        # ends the search without a second job
+#: runaway bound of an exhaustive frontier search: diameter is data, so
+#: a search that reaches it raises rather than answer truncated
+MAX_HOPS = 65_536
+
+#: hops between re-checkpoints of visited, a flat union of checkpointed
+#: frontiers in between: the cut only bounds the plan's width
+_VISITED_CUT = 16
+
+
+def frontier_search(
+    seed: DataFrame, expand, key: list[str], max_hops: int | None = None
+) -> tuple[DataFrame, bool]:
+    """The one frontier loop: a search from ``seed`` (hop 0, distinct on
+    ``key``) -> ``(visited, drained)``.
+
+    Each hop, ``expand(frontier, hop)`` gives the rows one step on (the
+    seed's columns); deduplicated on ``key``, anti-joined against
+    visited and checkpointed, they are the next frontier. ``key`` names
+    flat columns: struct join keys trip a Catalyst binding bug (see
+    Compiler._keyed_join). The hop's size rides its checkpoint job via
+    ``observe``, so an empty hop ends the search without a job of its
+    own; ``drained`` says whether one did within ``max_hops`` (default
+    ``MAX_HOPS``)."""
+    max_hops = MAX_HOPS if max_hops is None else max_hops
+    visited = frontier = seed.localCheckpoint()
+    for hop in range(1, max_hops + 1):
         obs = Observation()
-        nxt = (
-            frontier.join(edges, frontier["node"] == edges["src"], "inner")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
+        frontier = (
+            expand(frontier, hop)
+            .dropDuplicates(key)
+            .join(visited.select(*key), key, "left_anti")
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
         if obs.get["n"] == 0:
-            break
-        # no checkpoint: visited is a flat union of checkpointed
-        # frontier RDDs — nothing to recompute, and skipping it saves
-        # one job per hop
-        visited = visited.unionByName(nxt)
-        frontier = nxt
+            return visited, True
+        visited = visited.unionByName(frontier)
+        if hop % _VISITED_CUT == 0:
+            visited = visited.localCheckpoint()
+    return visited, False
+
+
+def bfs_distances(edges: DataFrame, source: int) -> DataFrame:
+    """Single-source BFS hop distances -> (node, dist)."""
+    edges = edges.localCheckpoint()
+    seed = edges.sparkSession.createDataFrame([(source, 0)], "node long, dist int")
+
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        return frontier.join(edges, frontier["node"] == edges["src"]).select(
+            F.col("dst").alias("node"), F.lit(hop).alias("dist")
+        )
+
+    visited, drained = frontier_search(seed, expand, ["node"])
+    if not drained:
+        raise RuntimeError(f"bfs_distances did not drain within {MAX_HOPS} hops")
     return visited
 
 
@@ -883,12 +913,11 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     line of work) bound it, and more samples just widen the source
     dimension of the SAME frontier join).
 
-    Scale shape: ONE grouped BFS carries the source id through the
-    frontier join (the paths.py GRAPH-?g lesson — never a per-source
-    loop), each round is an edge equi-join + anti-join against the
-    visited relation + a (source, node) min-dedup, and the visited
-    relation is localCheckpoint'ed per round to cut the lineage like
-    the other iterative kernels. Depth is a constant, so the oracle
+    Scale shape: ONE grouped ``frontier_search`` keyed (source, node)
+    carries the source id through the frontier join (the paths.py
+    GRAPH-?g lesson — never a per-source loop); each round is an edge
+    equi-join + a (source, node) dedup + an anti-join against the
+    visited relation. Depth is a constant (``max_hops``), so the oracle
     unrolls the exact same three rounds.
 
     Determinism: distances are small exact ints; 1/d is rounded to 9dp
@@ -906,18 +935,14 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     edges = adj.select(F.col("u").alias("eu"), F.col("v").alias("ev"))
-    reach = srcs.select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
-    frontier = reach
-    for d in range(1, HARMONIC_ROUNDS + 1):
-        hops = (
-            frontier.join(edges, frontier.v == F.col("eu"))
-            .select("s", F.col("ev").alias("v"), F.lit(d).alias("d"))
-            .distinct()
-            .join(reach.select("s", "v"), ["s", "v"], "left_anti")
-            .localCheckpoint()
+
+    def expand(frontier: DataFrame, hop: int) -> DataFrame:
+        return frontier.join(edges, frontier.v == F.col("eu")).select(
+            "s", F.col("ev").alias("v"), F.lit(hop).alias("d")
         )
-        reach = reach.unionByName(hops).localCheckpoint()
-        frontier = hops
+
+    seed = srcs.select("s", F.col("s").alias("v"), F.lit(0).alias("d"))
+    reach, _ = frontier_search(seed, expand, ["s", "v"], max_hops=HARMONIC_ROUNDS)
     return (
         reach.filter(F.col("d") > 0)
         .groupBy(F.col("v").alias("doc_id"))

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from graphdb_wikidata_spark.operators import graph as graph_mod
 from graphdb_wikidata_spark.operators.graph import (
     bfs_distances,
     connected_components,
@@ -96,6 +97,60 @@ def test_connected_components_two_islands(tri_plus_pair):
 def test_bfs_distances_cycle(tri_plus_pair):
     d = {r["node"]: r["dist"] for r in bfs_distances(tri_plus_pair, source=1).collect()}
     assert d == {1: 0, 2: 1, 3: 2}
+
+
+def _chain(spark, n):
+    """Directed path 1 -> 2 -> ... -> n."""
+    return spark.range(1, n).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+
+
+def test_bfs_distances_deep_chain(spark):
+    # an exhaustive search runs past any small cap (50 hops used to stop it at 51 rows)
+    d = {r["node"]: r["dist"] for r in bfs_distances(_chain(spark, 61), source=1).collect()}
+    assert d == {v: v - 1 for v in range(1, 62)}
+
+
+def test_bfs_distances_beyond_max_hops_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph_mod, "MAX_HOPS", 5)
+    with pytest.raises(RuntimeError, match="did not drain"):
+        bfs_distances(_chain(spark, 10), source=1)
+
+
+def _hop_jobs(kind, spark, monkeypatch, n):
+    """Spark jobs of one kind of frontier search over an n-node chain."""
+    if kind == "bfs":
+        edges = _chain(spark, n)
+        return _jobs(spark, f"hops-bfs-{n}", lambda: bfs_distances(edges, source=1).collect())
+    if kind == "closure":
+        from graphdb_wikidata_spark.engine import paths as paths_mod
+
+        monkeypatch.setattr(paths_mod, "SEMINAIVE_THRESHOLD", 0)
+        step = spark.createDataFrame([(i, i + 1) for i in range(1, n)], "a int, b int")
+        return _jobs(
+            spark,
+            f"hops-closure-{n}",
+            lambda: paths_mod._transitive_closure(step, "a", "b").collect(),
+        )
+    from graphdb_wikidata_spark.engine import GraphEngine
+    from graphdb_wikidata_spark.model.schema import statements_from_quads
+
+    quads = [(f"Q{i}", "P1", f"Q{i + 1}", f"s{i}") for i in range(1, n)]
+    eng = GraphEngine(spark, statements_from_quads(spark, quads))
+    return _jobs(
+        spark,
+        f"hops-path-{n}",
+        lambda: eng.sql("SELECT ?x WHERE { wd:Q1 wdt:P1+ ?x . }").collect(),
+    )
+
+
+@pytest.mark.parametrize("kind", ["bound_path", "closure", "bfs"])
+def test_frontier_search_jobs_per_hop(spark, monkeypatch, kind):
+    """Ten more hops of a frontier search cost at most 8 Spark jobs
+    each: a bound-endpoint path (`wd:Q1 wdt:P1+ ?x`), the semi-naive
+    closure and bfs_distances all run the one frontier loop."""
+    short = _hop_jobs(kind, spark, monkeypatch, 11)
+    deep = _hop_jobs(kind, spark, monkeypatch, 21)
+    assert deep - short <= 80, (kind, deep, short)
 
 
 def test_connected_components_deep_chain_log_rounds(spark):

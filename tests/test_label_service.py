@@ -81,7 +81,17 @@ CASES = {
     "service_inner": (
         f"SELECT ?a ?aLabel ?b WHERE {{ SERVICE <{SVC}> {{ {{ SELECT ?a ?aLabel ?b WHERE "
         f"{{ ?a wdt:P9 ?b . {_labels('en')} }} }} }} }}",
-        [[_q(1), _s("Belgium"), _q(3)]],
+        [[_q(1), _s("Remote Belgium"), _q(3)]],
+    ),
+    # an outer label SERVICE still labels what a subquery projects,
+    # whether it comes before or after the subquery
+    "outer_before_subquery": (
+        f"SELECT ?a ?aLabel WHERE {{ {_labels('en')} {{ SELECT ?a WHERE {{ ?a wdt:P2 ?o . }} }} }}",
+        [[_q(1), _s("Belgium")], [_q(3), _s("Europe")]],
+    ),
+    "outer_after_subquery": (
+        f"SELECT ?a ?aLabel WHERE {{ {{ SELECT ?a WHERE {{ ?a wdt:P2 ?o . }} }} {_labels('en')} }}",
+        [[_q(1), _s("Belgium")], [_q(3), _s("Europe")]],
     ),
     "service_outer": (
         f"SELECT ?a ?b ?bLabel WHERE {{ SERVICE <{SVC}> {{ ?a wdt:P9 ?b . }} {_labels('fr,en')} }}",

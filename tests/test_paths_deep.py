@@ -28,18 +28,21 @@ def chain_step(spark):
 
 
 def test_doubling_closure_on_deep_chain(chain_step):
-    out = _transitive_closure(chain_step, "a", "b", mode="doubling")
+    # 109 step rows: below SEMINAIVE_THRESHOLD, so pointer doubling
+    out = _transitive_closure(chain_step, "a", "b")
     assert out.count() == N * (N - 1) // 2
 
 
-def test_seminaive_closure_on_deep_chain(chain_step):
-    out = _transitive_closure(chain_step, "a", "b", mode="seminaive")
+def test_seminaive_closure_on_deep_chain(chain_step, monkeypatch):
+    monkeypatch.setattr(paths_mod, "SEMINAIVE_THRESHOLD", 0)
+    out = _transitive_closure(chain_step, "a", "b")
     assert out.count() == N * (N - 1) // 2
 
 
-def test_modes_agree_exactly(chain_step):
-    d = set(map(tuple, _transitive_closure(chain_step, "a", "b", mode="doubling").collect()))
-    sn = set(map(tuple, _transitive_closure(chain_step, "a", "b", mode="seminaive").collect()))
+def test_modes_agree_exactly(chain_step, monkeypatch):
+    d = set(map(tuple, _transitive_closure(chain_step, "a", "b").collect()))
+    monkeypatch.setattr(paths_mod, "SEMINAIVE_THRESHOLD", 0)
+    sn = set(map(tuple, _transitive_closure(chain_step, "a", "b").collect()))
     assert d == sn
 
 
